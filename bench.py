@@ -482,7 +482,6 @@ NOT_BENCHED: dict[str, str] = {
     "cosine_near_dups_lsh": "threshold: fixture 0.4 cosine is far below the >=0.9 near-dup regime (comment above)",
     "lsh_bucketed_knn": "threshold: same sign-LSH bucket machinery at fixture scale; ivf_knn is the timed ANN decision path",
     # machinery twins of timed members — same physical cost path
-    "keyword_breakdown_join": "twin:keyword_breakdown (identical oracle, join formulation)",
     "debug_keyword_posts": "twin:industry_counts (predicate composition of timed filters)",
     "top_channels_by_views": "twin:top_channels_salted (same groupBy-sum top-k, salted form timed)",
     "top_suppliers_by_revenue": "twin:top_customers_by_revenue (same join-agg-topk shape)",

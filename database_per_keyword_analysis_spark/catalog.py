@@ -30,6 +30,7 @@ from .operators import keywords as K
 from .operators import relational as R
 from .operators import stats as S
 from .sources import load
+from .sources.loader import _scan_file_sizes
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -97,7 +98,8 @@ _DEFERRED_TWINS = {
     #  BACK INTO the window for a second driver pass, guarding against
     #  local-vs-driver environment drift; r8 verdict item 2)
     # (r10: the nine OLDEST single-driver-pass members —
-    #  keyword_breakdown_join, quarterly_revenue_rollup (last green r1),
+    #  the since-deleted keyword-breakdown join twin,
+    #  quarterly_revenue_rollup (last green r1),
     #  events_weekly_counts, orders_monthly_counts,
     #  top_suppliers_by_revenue (r2), cosine_near_dup_pairs,
     #  stream_session_counts, video_frame_samples (r3),
@@ -474,8 +476,7 @@ _DEFERRED_TWINS = {
     "debug_keyword_posts",  # 2nd pass banked r9; predicate composition
     #   of in-window keyword filters
     "top_posts_per_industry",  # 2nd pass banked r9; rank-per-group over
-    #   the keyword join (promoted keyword_breakdown_join covers the
-    #   contains-join formulation in-window)
+    #   the exploded industry labels
     "bloom_contamination",  # green r5-r9 (FIVE driver passes — the
     #   catalog's most-verified member); derived-m Bloom probe over the
     #   same exact-gram tier as ngram_contamination; NEW differential
@@ -694,8 +695,6 @@ _DEFERRED_TWINS = {
     #   stream_corpus_drift in-window
     "video_frame_samples",  # green r1-r3,r10; multimodal keeps the
     #   promoted multimodal_byte_features in-window
-    "keyword_breakdown_join",  # green r1,r10; result-equality twin of
-    #   keyword_breakdown (differential-covered)
     "stream_purchase_state_pit",  # green r9,r10; streaming PIT —
     #   differential-proven since its r8 deferral-at-birth
     # ---- round-11 novel-query slots (novel machinery goes IN the
@@ -1240,6 +1239,13 @@ def q_keyword_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STREAMING_PRED = _contains_any("text", CFG.industry_keywords["Streaming"])
 
 
+def _streaming_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cleaned, classified documents of the Streaming industry — the
+    one-industry slice the slice queries below report on."""
+    docs = load(spark, sf_dir, "documents")
+    return K.classified(docs, CFG, channel_col="source").where(K.flag_col("Streaming"))
+
+
 @register(
     "top_channels_by_views",
     f"WITH {_cleaned_cte(CFG)} "
@@ -1250,11 +1256,7 @@ _STREAMING_PRED = _contains_any("text", CFG.industry_keywords["Streaming"])
 def q_top_channels_by_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-15 channels by Σ views within one industry slice (A1+T2;
     main.py:428), views ≈ n_chars per FIXTURES.md §5."""
-    docs = load(spark, sf_dir, "documents")
-    flagged = K.categorize(
-        K.clean(K.coarse_keyword_filter(docs, CFG), CFG, channel_col="source"), CFG
-    )
-    sliced = flagged.where(K.flag_col("Streaming"))
+    sliced = _streaming_slice(spark, sf_dir)
     return S.top_channels_by_views(sliced, "source", "n_chars", 15)
 
 
@@ -1271,11 +1273,7 @@ def q_top_posts(spark: SparkSession, sf_dir: str) -> DataFrame:
     main.py:427, 918)."""
     from pyspark.sql import functions as F
 
-    docs = load(spark, sf_dir, "documents")
-    flagged = K.categorize(
-        K.clean(K.coarse_keyword_filter(docs, CFG), CFG, channel_col="source"), CFG
-    )
-    sliced = flagged.where(K.flag_col("Streaming")).select(
+    sliced = _streaming_slice(spark, sf_dir).select(
         "doc_id",
         F.col("source").alias("channel"),
         F.col("n_chars").alias("views"),
@@ -4024,18 +4022,9 @@ def q_word_frequency_tier_b(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Coverage completions: J1 theta-join formulation of the keyword count,
-# E1 explicit union-all, and the reference's third entry point (the
-# parameterized debug query, main.py:956-990).
+# Coverage completions: E1 explicit union-all and the reference's third
+# entry point (the parameterized debug query, main.py:956-990).
 # ---------------------------------------------------------------------------
-
-
-@register("keyword_breakdown_join", _keyword_breakdown_sql(CFG))
-def q_keyword_breakdown_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4 via broadcast theta-join posts⋈keywords ON contains(text, kw)
-    (J1) — must agree exactly with the one-pass agg formulation."""
-    docs = load(spark, sf_dir, "documents")
-    return K.keyword_breakdown_join(docs, CFG, text_col="text", channel_col="source")
 
 
 @register(
@@ -4099,11 +4088,7 @@ def q_top_channels_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators import scale as SC
 
-    docs = load(spark, sf_dir, "documents")
-    flagged = K.categorize(
-        K.clean(K.coarse_keyword_filter(docs, CFG), CFG, channel_col="source"), CFG
-    )
-    sliced = flagged.where(K.flag_col("Streaming"))
+    sliced = _streaming_slice(spark, sf_dir)
     return (
         SC.salted_sum(sliced, ["source"], "n_chars", "total_views")
         .select(F.col("source").alias("channel"), "total_views")
@@ -4259,14 +4244,8 @@ def q_top_posts_per_industry(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     docs = load(spark, sf_dir, "documents")
-    flagged = K.categorize(
-        K.clean(docs, CFG, "text", channel_col="source"), CFG, "text"
-    )
-    labels = F.array_compact(
-        F.array(*[F.when(F.col(K.flag_col(i)), F.lit(i)) for i in CFG.industries])
-    )
-    lab = flagged.where(K.any_industry(flagged, CFG)).select(
-        F.explode(labels).alias("industry"),
+    lab = K.classified(docs, CFG, channel_col="source").select(
+        F.explode(K.industry_labels(CFG)).alias("industry"),
         "doc_id",
         F.col("source").alias("channel"),
         F.col("n_chars").alias("views"),
@@ -5424,14 +5403,15 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (min aggregate + join-back) beats idle-core parallelism —
     # measured flip between sf0.1 (checkpoint 1.269x WORSE) and 10x
     # (0.821x better); see SCALE.md r15 rows.
+    lineitem = load(spark, sf_dir, "lineitem", parallel=True)
     return R.min_cost_supplier(
-        load(spark, sf_dir, "lineitem", parallel=True),
+        lineitem,
         load(spark, sf_dir, "supplier"),
         load(spark, sf_dir, "nation"),
         load(spark, sf_dir, "region"),
         load(spark, sf_dir, "part"),
         materialize_offers=(
-            _table_bytes(sf_dir, "lineitem") >= _MATERIALIZE_LINEITEM_MIN_BYTES
+            sum(_scan_file_sizes(lineitem) or ()) >= _MATERIALIZE_LINEITEM_MIN_BYTES
         ),
     )
 
@@ -6268,31 +6248,15 @@ def q_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk bytes of one fixture table (file or multi-part dir) —
-    the metadata-only input-size probe behind the r15 scale-gated
-    materialization flags (min_cost_supplier, source_token_js_matrix):
-    the gate must be derived from the DATA, not hard-coded for either
-    local mode or the cluster."""
-    import os
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        return sum(
-            e.stat().st_size for e in os.scandir(path) if e.is_file()
-        )
-    try:
-        return os.path.getsize(path)
-    except OSError:
-        return 0
-
-
 # Gate thresholds for the r15 scale-aware materialization (SCALE.md r15
 # rows): the r14 sf0.1 probes measured the checkpoints LOSING 1.25-1.27x
 # (duplicated branches hide on idle cores) while the r15 10x probes
 # measured them WINNING 0.82-0.86x; each threshold sits between the two
 # measured regimes' input sizes (documents: 0.59 MB vs 6.9 MB; lineitem:
-# 10.8 MB vs 140 MB).
+# 10.8 MB vs 140 MB).  The gated query compares the bytes of the files its
+# scan reads (loader._scan_file_sizes: metadata only, local, nested and
+# object-store layouts alike; 0 when sizes are unobtainable), so the gate
+# follows the DATA rather than a constant for local mode or the cluster.
 _MATERIALIZE_DOCS_MIN_BYTES = 2 * 1024**2
 _MATERIALIZE_LINEITEM_MIN_BYTES = 32 * 1024**2
 
@@ -11370,11 +11334,9 @@ def q_source_token_js_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode per consumer beats idle-core parallelism — measured flip
     # between sf0.1 (checkpoint 1.252x WORSE) and 10x (0.863x better);
     # see SCALE.md r15 rows.  Size-derived, not a local[32] constant.
-    big = _table_bytes(sf_dir, "documents") >= _MATERIALIZE_DOCS_MIN_BYTES
-    return TQ.token_js_matrix(
-        load(spark, sf_dir, "documents", parallel=True),
-        materialize_counts=big,
-    )
+    docs = load(spark, sf_dir, "documents", parallel=True)
+    big = sum(_scan_file_sizes(docs) or ()) >= _MATERIALIZE_DOCS_MIN_BYTES
+    return TQ.token_js_matrix(docs, materialize_counts=big)
 
 
 @register(

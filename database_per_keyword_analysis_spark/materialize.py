@@ -37,6 +37,7 @@ this seam only touches what query construction registered.
 
 from __future__ import annotations
 
+import threading
 from typing import TYPE_CHECKING
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -45,13 +46,17 @@ if TYPE_CHECKING:  # pragma: no cover
 # Strong references on purpose: the JVM-side CacheManager entry exists
 # whether or not Python still holds the DataFrame, so a weakref that
 # died would strand the entry with no handle left to unpersist it.
+# Queries built on several threads of one session share the registry,
+# so every read and write holds _LOCK.
 _PERSISTED: list["DataFrame"] = []
+_LOCK = threading.Lock()
 
 
 def track(df: "DataFrame") -> "DataFrame":
     """Register a persisted DataFrame for later release; returns it
     unchanged so call sites stay one expression."""
-    _PERSISTED.append(df)
+    with _LOCK:
+        _PERSISTED.append(df)
     return df
 
 
@@ -64,8 +69,13 @@ def release_materialized() -> int:
     number of entries released."""
     import gc
 
+    # take the entries and empty the registry in one step, so an entry
+    # tracked while this call unpersists stays for the next release
+    with _LOCK:
+        taken = _PERSISTED[:]
+        _PERSISTED.clear()
     n = 0
-    for df in _PERSISTED:
+    for df in taken:
         try:
             df.unpersist()
             n += 1
@@ -73,11 +83,11 @@ def release_materialized() -> int:
             # a stopped/replaced SparkSession invalidates the handle;
             # its cache died with the session, nothing to release
             pass
-    _PERSISTED.clear()
     gc.collect()
     return n
 
 
 def n_tracked() -> int:
     """Current registry size (tests/telemetry)."""
-    return len(_PERSISTED)
+    with _LOCK:
+        return len(_PERSISTED)

@@ -102,9 +102,9 @@ def pagerank_fixed(
     # localCheckpoint: checkpoint blocks live MEMORY_AND_DISK in the
     # unified pool, and materializing a 58M-edge list that way starved
     # execution memory into UNABLE_TO_ACQUIRE_MEMORY under the local
-    # 8 GiB default heap (measured r9, tools/measure_scale_graph.py)
-    # — while DISK_ONLY blocks cost the pool nothing and small-graph
-    # re-reads come from the OS page cache anyway.  Node-sized tables
+    # 8 GiB default heap (measured r9: SCALE.md "Round-9: graph posture
+    # auto-derivation") — while DISK_ONLY blocks cost the pool nothing
+    # and small-graph re-reads come from the OS page cache anyway.  Node-sized tables
     # below keep the (faster) localCheckpoint.
     ed = _mat.track(e.persist(StorageLevel.DISK_ONLY))
     nodes = (
@@ -503,8 +503,8 @@ def hits_fixed(
     (u,v) contributes (probe=(v,authority) → out=(u,hub)) and
     (probe=(u,hub) → out=(v,authority)) — making an iteration one
     equi-join on (node, kind) plus one (node, kind) aggregate.  The
-    interleaved median-of-3 A/B (tools/ab_hits_fused.py; BASELINE.md
-    round-11 table) measured the fused arm 1.45x SLOWER at sf0.1 and
+    interleaved median-of-3 A/B (BASELINE.md "Round-11 A/B: HITS probe
+    shape") measured the fused arm 1.45x SLOWER at sf0.1 and
     1.52x slower at 10x: halving the join count does not pay for
     doubling the persisted probe rows and widening every join and
     group key by the kind column, so the fused form is kept only as

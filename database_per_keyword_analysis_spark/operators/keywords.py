@@ -10,21 +10,21 @@ Reference behavior (all pandas, /root/reference/main.py):
   * per-keyword hit counts on the cleaned industry slice (main.py:369-381).
 
 Spark realization: everything is built-in column expressions (`rlike`,
-`contains`, `lower`, boolean algebra) so the whole pipeline is one lazy
-Catalyst plan — filters and projections push into the parquet scan, flags
-are evaluated in a single whole-stage-codegen pass, and the per-keyword
-breakdown is ONE aggregation with map-side partial combine (no shuffle of
-raw text) followed by a `stack` unpivot.
+`contains`, `lower`, boolean algebra), so each report piece is one lazy
+Catalyst plan.  :func:`classified` is the one place the cleaned,
+flagged slice is built; every report piece (industry counts, keyword
+breakdown, stats report, word frequencies, the debug query and the
+catalog's slice queries) starts from it.  Filters and projections push
+into the parquet scan and all flags evaluate in one whole-stage-codegen
+pass.  The per-keyword breakdown joins that slice to the broadcast
+keyword dimension on `contains` and counts per (industry, keyword).
 
-Scale notes (100 TB): a single regex pass over `text` is O(rows); there is
-no join and no shuffle until the final tiny aggregation.  The keyword dim
-is Python-side constant-folded into the plan (equivalent to broadcasting a
-5×~20-row dim; SURVEY.md §2.3 J1).
+Scale notes (100 TB): the regex pass over `text` is O(rows); the only
+shuffles are the final aggregations, whose inputs are partial counts
+(industries, or industry × keyword pairs), never raw text.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -91,6 +91,34 @@ def clean(
     return out
 
 
+def classified(
+    df: DataFrame, cfg: KeywordConfig, text_col: str = "text", channel_col: str | None = None
+) -> DataFrame:
+    """The cleaned, classified slice every keyword-report piece starts
+    from: non-NULL text → noise/blacklist clean → `is_<industry>` flags
+    (main.py:309-358).  NULL text never matches a keyword (`na=False`
+    parity), so the IsNotNull check pushes into the scan.
+
+    Rows matching no keyword stay, with every flag False; each consumer
+    slices on a flag, explodes :func:`industry_labels` or matches a
+    keyword, and drops them there.  The reference's coarse pre-filter
+    (:func:`coarse_keyword_filter`) is deliberately not applied: its
+    one alternation over all keywords costs more per row than the
+    per-industry regexes it would spare (measured on the keyword
+    report, it doubled the stats report's task time).
+    """
+    present = df.where(F.col(text_col).isNotNull())
+    return categorize(clean(present, cfg, text_col, channel_col), cfg, text_col)
+
+
+def industry_labels(cfg: KeywordConfig) -> Column:
+    """Array of the industries whose flag is set on a classified row —
+    the multi-label membership as one value to explode (main.py:320-324)."""
+    return F.array_compact(
+        F.array(*[F.when(F.col(flag_col(i)), F.lit(i)) for i in cfg.industries])
+    )
+
+
 def industry_counts(
     df: DataFrame, cfg: KeywordConfig, text_col: str = "text", channel_col: str | None = None
 ) -> DataFrame:
@@ -99,15 +127,10 @@ def industry_counts(
 
     Returns (industry STRING, post_count BIGINT), ordered by industry.
     """
-    flagged = categorize(
-        clean(coarse_keyword_filter(df, cfg, text_col), cfg, text_col, channel_col),
-        cfg,
-        text_col,
-    )
     aggs = [
         F.sum(F.col(flag_col(i)).cast("long")).alias(i) for i in cfg.industries
     ]
-    wide = flagged.agg(*aggs)
+    wide = classified(df, cfg, text_col, channel_col).agg(*aggs)
     stack_expr = ", ".join(f"'{i}', `{i}`" for i in cfg.industries)
     return (
         wide.selectExpr(
@@ -118,10 +141,11 @@ def industry_counts(
     )
 
 
-def any_industry(df: DataFrame, cfg: KeywordConfig) -> Column:
-    """Row-wise disjunction over the flag columns (F9) — the reference's
-    "Global" group membership (main.py:547-550)."""
-    return reduce(lambda a, b: a | b, [F.col(flag_col(i)) for i in cfg.industries])
+def keyword_dim(spark, cfg: KeywordConfig) -> DataFrame:
+    """The keyword dimension as a (industry, keyword) DataFrame — the
+    reference's INDUSTRY_KEYWORDS dict (main.py:45-74) as data."""
+    rows = [(i, k) for i, kws in cfg.industry_keywords.items() for k in kws]
+    return spark.createDataFrame(rows, ["industry", "keyword"])
 
 
 def keyword_breakdown(
@@ -131,70 +155,25 @@ def keyword_breakdown(
     main.py:369-381), zero-count keywords dropped, sorted desc (ties broken
     by keyword for determinism — SURVEY.md §7.4).
 
-    Formulation: one aggregation with a `sum(contains(...))` column per
-    (industry, keyword) — a single scan, map-side partials, then a tiny
-    unpivot.  The explode+join alternative shuffles every (row × keyword)
-    pair; this shuffles ~80 longs.
+    Posts ⋈ keywords on `contains(text, keyword)` as a broadcast
+    nested-loop join, then one count per (industry, keyword): the
+    reference's loop is logically `CROSS JOIN ... WHERE instr > 0`
+    (main.py:231-237, 371-378).  A hit on an industry's keyword implies
+    that industry's flag, so the join needs only the text column.  The
+    plan's size stays fixed as the keyword list grows; the broadcast dim
+    is O(|keywords|) per executor.
     """
-    flagged = categorize(
-        clean(coarse_keyword_filter(df, cfg, text_col), cfg, text_col, channel_col),
-        cfg,
-        text_col,
-    )
-    aggs = []
-    pairs = []
-    for idx, (industry, kws) in enumerate(cfg.industry_keywords.items()):
-        for jdx, kw in enumerate(kws):
-            alias = f"c_{idx}_{jdx}"
-            aggs.append(
-                F.sum(
-                    (F.col(flag_col(industry)) & F.col(text_col).contains(kw)).cast("long")
-                ).alias(alias)
-            )
-            pairs.append((industry, kw, alias))
-    wide = flagged.agg(*aggs)
-    stack_expr = ", ".join(
-        f"'{i}', '{k}', `{a}`" for i, k, a in pairs
-    ).replace("''", "''")
-    long = wide.selectExpr(
-        f"stack({len(pairs)}, {stack_expr}) AS (industry, keyword, cnt)"
-    )
-    return (
-        long.where(F.col("cnt") > 0)
-        .orderBy(F.col("industry"), F.desc("cnt"), F.col("keyword"))
-    )
-
-
-def keyword_dim(spark, cfg: KeywordConfig) -> DataFrame:
-    """The keyword dimension as a (industry, keyword) DataFrame — the
-    reference's INDUSTRY_KEYWORDS dict (main.py:45-74) as data."""
-    rows = [(i, k) for i, kws in cfg.industry_keywords.items() for k in kws]
-    return spark.createDataFrame(rows, ["industry", "keyword"])
-
-
-def keyword_breakdown_join(
-    df: DataFrame,
-    cfg: KeywordConfig,
-    text_col: str = "text",
-    channel_col: str | None = None,
-) -> DataFrame:
-    """A4 in its J1 theta-join formulation: posts ⋈ keywords on
-    `contains(text, keyword)` as a broadcast nested-loop join
-    (main.py:231-237/371-378 is logically `CROSS JOIN ... WHERE instr>0`).
-
-    Same result as `keyword_breakdown`; that one-pass agg is the faster
-    plan (shuffles ~80 longs vs row×keyword pairs), but the join form is
-    the one that generalizes to a keyword dim too large to inline in an
-    expression tree — broadcast stays O(|keywords|) per executor.
-    """
-    cleaned = clean(coarse_keyword_filter(df, cfg, text_col), cfg, text_col, channel_col)
     kw = keyword_dim(df.sparkSession, cfg)
     return (
-        cleaned.select(text_col)
+        classified(df, cfg, text_col, channel_col)
+        .select(text_col)
         .crossJoin(F.broadcast(kw))
         .where(F.col(text_col).contains(F.col("keyword")))
         .groupBy("industry", "keyword")
         .agg(F.count(F.lit(1)).alias("cnt"))
+        # at most |keywords| rows: sort them in one task rather than
+        # range-partition them (a sampling job plus a shuffle)
+        .coalesce(1)
         .orderBy(F.col("industry"), F.desc("cnt"), F.col("keyword"))
     )
 
@@ -215,11 +194,11 @@ def debug_keyword_posts(
     Predicate composition: is_<industry> ∧ contains(text, keyword) ∧
     ¬blacklisted ∧ ¬noise — all pushed into one scan.
     """
-    flagged = categorize(clean(df, cfg, text_col, channel_col), cfg, text_col)
     from ..functions.text import snippet
 
     return (
-        flagged.where(F.col(flag_col(industry)) & F.col(text_col).contains(keyword))
+        classified(df, cfg, text_col, channel_col)
+        .where(F.col(flag_col(industry)) & F.col(text_col).contains(keyword))
         .select(
             F.col(id_col),
             F.col(channel_col).alias("channel"),

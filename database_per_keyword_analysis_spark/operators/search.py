@@ -84,6 +84,22 @@ def bm25_search(
     return _bm25_score(tf, dl, id_col, k1, b, top_k)
 
 
+def _corpus_stats(dl: DataFrame) -> DataFrame:
+    """BM25 corpus statistics (n_docs, avgdl) over a doc-lengths table."""
+    return dl.agg(
+        F.count(F.lit(1)).cast("double").alias("n_docs"),
+        F.avg("dl").alias("avgdl"),
+    )
+
+
+def _write_corpus_stats(spark, index_path: str) -> None:
+    """Overwrite `index_path`/stats with (n_docs, avgdl) derived from the
+    index's current doclens — the last write of every index writer."""
+    _corpus_stats(spark.read.parquet(f"{index_path}/doclens")).write.mode(
+        "overwrite"
+    ).parquet(f"{index_path}/stats")
+
+
 def _bm25_score(
     tf: DataFrame,
     dl: DataFrame,
@@ -95,10 +111,7 @@ def _bm25_score(
     """Scoring dataflow shared by the in-plan form (bm25_search) and
     the persisted-index probe (bm25_probe): tf = (id, token, tf)
     already filtered to the query terms, dl = (id, dl)."""
-    stats = dl.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    )
+    stats = _corpus_stats(dl)
     df_t = tf.groupBy("token").agg(
         F.countDistinct(id_col).cast("double").alias("df")
     )
@@ -174,10 +187,7 @@ def build_postings_index(
         posted = spark.read.parquet(f"{index_path}/postings")
     dl = posted.groupBy(id_col).agg(F.sum("tf").alias("dl"))
     dl.write.mode("overwrite").parquet(f"{index_path}/doclens")
-    spark.read.parquet(f"{index_path}/doclens").agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    ).write.mode("overwrite").parquet(f"{index_path}/stats")
+    _write_corpus_stats(spark, index_path)
 
 
 def _open_postings(
@@ -210,8 +220,11 @@ def bm25_probe(
     n_buckets: int | None = None,
 ) -> DataFrame:
     """Query the persisted postings index (build_postings_index): the
-    token IN-filter pushes into the postings parquet scan, so a probe
-    touches O(matching postings) — the corpus text is never read.
+    token IN-filter pushes into the postings parquet scan, so the
+    postings side reads only matching postings and the corpus text is
+    never read.  The doclens side is not narrowed: every probe
+    aggregates the whole doclens table for (n_docs, avgdl) and joins
+    it, so a probe costs O(indexed docs) on top of its postings.
     Pass the index's `n_buckets` to probe the bucketed layout: the
     IN-filter then prunes whole buckets and the df aggregate skips its
     Exchange.  Result-identical to bm25_search over the same corpus
@@ -468,10 +481,7 @@ def update_postings_index(
     tf.groupBy(id_col).agg(F.sum("tf").alias("dl")).write.mode(
         "append"
     ).parquet(f"{index_path}/doclens")
-    spark.read.parquet(f"{index_path}/doclens").agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    ).write.mode("overwrite").parquet(f"{index_path}/stats")
+    _write_corpus_stats(spark, index_path)
 
 
 def compact_postings_index(
@@ -508,10 +518,7 @@ def compact_postings_index(
     ).parquet(f"{index_path}/doclens__compact_tmp")
     # doclens is derived state: same rename-aside dance
     swap_directory(f"{index_path}/doclens__compact_tmp", f"{index_path}/doclens")
-    spark.read.parquet(f"{index_path}/doclens").agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    ).write.mode("overwrite").parquet(f"{index_path}/stats")
+    _write_corpus_stats(spark, index_path)
 
 
 RRF_K = 60  # Cormack/Clarke/Buettcher 2009's constant; rank-60 damping

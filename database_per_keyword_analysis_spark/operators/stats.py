@@ -103,30 +103,22 @@ def stats_report(
     (/root/reference/main.py:385-437): per industry — cleaned slice,
     count, top-k posts by views, top-k channels by summed views — as a
     dict per industry.  The DataFrame entries (clean_df / top_posts /
-    top_channels) stay LAZY and share one cleaned/categorized subtree;
-    only `count` is an eager scalar (matching the reference's report
-    shape, main.py:426) — and ALL industry counts come from ONE
-    conditional-sum aggregation pass over the shared subtree (the
-    industry_counts shape), not a per-industry job.  Cache `flagged`
-    upstream if actioning many pieces at once.
+    top_channels) stay LAZY slices of one `keywords.classified` subtree.
+    Only `count` is an eager scalar (the reference's report shape,
+    main.py:426), and it is read from `keywords.industry_counts`: one
+    job for all industries, not one per industry.  Cache `df` upstream
+    if actioning many pieces at once.
     """
     from . import keywords as K
 
-    flagged = K.categorize(
-        K.clean(df, cfg, text_col, channel_col), cfg, text_col
-    )
-    counts_row = flagged.agg(
-        *[
-            F.sum(F.col(K.flag_col(i)).cast("long")).alias(K.flag_col(i))
-            for i in cfg.industries
-        ]
-    ).collect()[0]
+    flagged = K.classified(df, cfg, text_col, channel_col)
+    counts = dict(K.industry_counts(df, cfg, text_col, channel_col).collect())
     report = {}
     for industry in cfg.industries:
         sliced = flagged.where(F.col(K.flag_col(industry)))
         report[industry] = {
             "clean_df": sliced,
-            "count": int(counts_row[K.flag_col(industry)] or 0),
+            "count": counts[industry],
             "top_posts": top_k_by(
                 sliced.select(id_col, channel_col, views_col),
                 views_col,

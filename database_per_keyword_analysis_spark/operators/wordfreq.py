@@ -105,20 +105,13 @@ def word_frequency_by_industry(
     """
     from . import keywords as K
 
-    flagged = K.categorize(K.clean(df, cfg, text_col, channel_col), cfg, text_col)
-    labels = F.array_compact(
-        F.array(
-            *[
-                F.when(F.col(K.flag_col(i)), F.lit(i))
-                for i in cfg.industries
-            ],
-            F.when(K.any_industry(flagged, cfg), F.lit("Global")),
-        )
+    labels = K.industry_labels(cfg)
+    labeled = (
+        K.classified(df, cfg, text_col, channel_col)
+        .where(F.size(labels) > 0)
+        .select(F.concat(labels, F.array(F.lit("Global"))).alias("labels"), text_col)
     )
-    labeled = flagged.where(K.any_industry(flagged, cfg)).select(
-        labels.alias("labels"), text_col
-    )
-    tok = labeled.where(F.col(text_col).isNotNull()).select(
+    tok = labeled.select(
         "labels",
         F.explode(TX.tokenize(TX.normalize_text(F.col(text_col)))).alias("word"),
     )

@@ -107,7 +107,7 @@ def index_batch(
     table from the doclens union.  Doc_ids are append-only across the
     stream (the checkpoint assigns each input file to exactly one
     batch, so a retry rewrites the same ids into the same directory)."""
-    from ..operators.search import _tokens
+    from ..operators.search import _tokens, _write_corpus_stats
 
     spark = batch_df.sparkSession
     toks = _tokens(batch_df, text_col, id_col)
@@ -122,10 +122,7 @@ def index_batch(
     tf.groupBy(id_col).agg(F.sum("tf").alias("dl")).write.mode(
         "overwrite"
     ).parquet(os.path.join(index_path, "doclens", f"batch={batch_id}"))
-    spark.read.parquet(os.path.join(index_path, "doclens")).agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    ).write.mode("overwrite").parquet(os.path.join(index_path, "stats"))
+    _write_corpus_stats(spark, index_path)
 
 
 def run_streaming_index(
@@ -179,9 +176,9 @@ def upsert_batch(
     `merge_into_parquet` rewrites each touched partition key-clustered
     (range-partitioned + sorted by key), so parquet min/max stats let
     the probe skip every row group holding no batch key — data read
-    stays flat as the target grows (measured:
-    tools/measure_scale_upsert.py --probe, SCALE.md round-8).  Only
-    footer metadata grows with the table.  The per-key column-pruned
+    stays flat as the target grows (measured: SCALE.md "Round-8: CDC
+    upsert version probe bounded by batch, not table").  Only footer
+    metadata grows with the table.  The per-key column-pruned
     FULL scan remains the fallback when a batch's key set exceeds the
     pushdown cap.  Partition-mover handling (a key whose
     ``partition_col`` changed) is inherited from

@@ -119,10 +119,6 @@ def test_revenue_by_nation_salted_equals_primary(spark, sf_dir):
     )
 
 
-def test_keyword_breakdown_join_equals_primary(spark, sf_dir):
-    _assert_equal_results(spark, sf_dir, "keyword_breakdown_join", "keyword_breakdown")
-
-
 def test_stream_sliding_counts_equals_batch(spark, sf_dir):
     _assert_equal_results(spark, sf_dir, "stream_sliding_counts", "sliding_window_counts")
 

@@ -47,14 +47,7 @@ def posts(spark):
 
 
 def _pipeline(posts):
-    return K.categorize(
-        K.clean(
-            K.coarse_keyword_filter(posts, CFG),
-            CFG,
-            channel_col="channel_username",
-        ),
-        CFG,
-    )
+    return K.classified(posts, CFG, channel_col="channel_username")
 
 
 def test_golden_industry_counts(posts):
@@ -119,7 +112,7 @@ def test_golden_multilabel_and_global(posts):
         F.col(K.flag_col("Steel")) & F.col(K.flag_col("Water"))
     ).select("post_id").collect()
     assert [r.post_id for r in both] == [3]
-    n_global = flagged.where(K.any_industry(flagged, CFG)).count()
+    n_global = flagged.where(F.size(K.industry_labels(CFG)) > 0).count()
     assert n_global == 4
 
 

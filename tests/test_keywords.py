@@ -83,7 +83,7 @@ def test_industry_counts_empty_input(spark):
     assert got == {"Alpha": 0, "Beta": 0}
 
 
-def test_keyword_breakdown(posts):
+def test_keyword_breakdown(spark, posts):
     out = K.keyword_breakdown(posts, CFG, channel_col="channel")
     got = {(r.industry, r.keyword): r.cnt for r in out.collect()}
     assert got == {
@@ -91,6 +91,34 @@ def test_keyword_breakdown(posts):
         ("Alpha", "green pear"): 1,  # 7
         ("Beta", "banana"): 1,  # 2 (6 blacklisted)
     }
+    # a keyword listed under two industries counts in both; a keyword
+    # that is a substring of another counts on its own; NULL text and
+    # zero-hit keywords produce no row
+    cfg = KeywordConfig(
+        industry_keywords={
+            "Alpha": ["apple", "green pear", "pear"],
+            "Beta": ["banana", "apple"],
+            "Gamma": ["kiwi"],
+        },
+        noise_terms=CFG.noise_terms,
+        channel_blacklist=CFG.channel_blacklist,
+    )
+    more = spark.createDataFrame(
+        [
+            (10, "pear tart", "chanD", 100),
+            (11, None, "chanD", 110),
+            (12, "apple and green pear", "chanD", 120),
+        ],
+        posts.schema,
+    )
+    out = K.keyword_breakdown(posts.unionByName(more), cfg, channel_col="channel")
+    assert [tuple(r) for r in out.collect()] == [
+        ("Alpha", "apple", 4),  # 1, 2, 9, 12
+        ("Alpha", "pear", 4),  # 7, 8 ('greenpear'), 10, 12
+        ("Alpha", "green pear", 2),  # 7, 12
+        ("Beta", "apple", 4),  # 1, 2, 9, 12
+        ("Beta", "banana", 1),  # 2
+    ]
 
 
 def test_regex_special_chars_in_keywords(spark):
