@@ -4787,10 +4787,11 @@ _IVF_BUCKETS = 8
 def q_bm25_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """bm25_search answered from the PERSISTED inverted index
     (build_postings_index → bm25_probe), in the bucketed-by-token
-    layout: the first call builds postings/doclens/stats under .cache,
-    every later call is a pure bucket-pruned index probe that never
-    reads the corpus text.  Result-identical twin of the in-window
-    bm25_search (same oracle SQL; parity also pytest-asserted)."""
+    layout: the first call builds the index under .cache (its stats
+    manifest is written last), every later call is a pure bucket-pruned
+    index probe that never reads the corpus text.  Result-identical
+    twin of the in-window bm25_search (same oracle SQL; parity also
+    pytest-asserted)."""
     import os
 
     from .operators import search as SRCH2
@@ -4801,7 +4802,7 @@ def q_bm25_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
             load(spark, sf_dir, "documents", parallel=True), path,
             n_buckets=_BM25_BUCKETS,
         )
-    return SRCH2.bm25_probe(spark, path, n_buckets=_BM25_BUCKETS)
+    return SRCH2.bm25_probe(spark, path)
 
 
 def _hybrid_rrf_sql(

@@ -528,9 +528,10 @@ def hits_fixed(
     # (as the opposite chain's iteration-0 scores), so materializing
     # them bought nothing.
     if broadcast_scores is None:
+        # struct(): count a NULL endpoint as one node, as distinct() does
         pops = ed.agg(
-            F.countDistinct("src").alias("h"),
-            F.countDistinct("dst").alias("a"),
+            F.countDistinct(F.struct("src")).alias("h"),
+            F.countDistinct(F.struct("dst")).alias("a"),
         ).first()
         broadcast_scores = pops["h"] + pops["a"] <= GRAPH_BROADCAST_MAX_NODES
     hubs = ed.select(F.col("src").alias("node")).distinct()

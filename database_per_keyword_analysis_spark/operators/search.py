@@ -19,21 +19,28 @@ Scale shape (100 TB):
   (map-side combine); the query-term postings table is filtered BEFORE
   its groupBy, so the shuffled tf table holds only docs containing a
   query term; per-term document frequencies reduce to |q| rows and
-  broadcast back; corpus stats (N, avgdl) attach as a broadcast scalar.
-  The only full-corpus shuffle is the doc-length aggregate.  At real
-  scale the postings (token -> doc) table would be materialized once as
-  a bucketed inverted index and probed per query; the per-query plan
-  here IS that probe-side dataflow.
+  broadcast back; corpus stats (N, avgdl) attach as a scalar subquery.
+  The only full-corpus shuffle is the doc-length aggregate.
 * vocab_coverage — distributed token count, then TakeOrdered limits the
   ranked vocabulary to top_n rows before the cumulative-sum window, so
   the single-partition prefix sum only ever sees top_n rows (bounded by
   the caller, never by corpus size); the corpus total attaches as a
   broadcast scalar.
+
+The persisted BM25 index has one writer, `_write_index` (behind
+build/update/compact_postings_index and streaming.ingest.index_batch),
+and one reader, bm25_probe.  Under `index_path`: postings/ (id, token,
+tf) — plain, bucketed by token, or `batch=<id>/` partitions; doclens/
+(id, dl) from the same rows; stats/, the manifest (n_docs, avgdl,
+n_buckets; n_buckets NULL unless bucketed), written LAST over the whole
+doclens table — a writer that fails earlier leaves the previous
+manifest, and re-running it repairs the index.  A probe reads the
+manifest once and scores with its values.  Ids are BIGINT.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -81,7 +88,15 @@ def bm25_search(
         .groupBy(id_col, "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    return _bm25_score(tf, dl, id_col, k1, b, top_k)
+    s = _corpus_stats(dl).select(F.struct("n_docs", "avgdl")).scalar()
+    return _bm25_score(tf, dl, s["n_docs"], s["avgdl"], id_col, k1, b, top_k)
+
+
+def _term_freqs(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, token, tf) over every token of every doc."""
+    return _tokens(docs, text_col, id_col).groupBy(id_col, "token").agg(
+        F.count(F.lit(1)).alias("tf")
+    )
 
 
 def _corpus_stats(dl: DataFrame) -> DataFrame:
@@ -92,17 +107,11 @@ def _corpus_stats(dl: DataFrame) -> DataFrame:
     )
 
 
-def _write_corpus_stats(spark, index_path: str) -> None:
-    """Overwrite `index_path`/stats with (n_docs, avgdl) derived from the
-    index's current doclens — the last write of every index writer."""
-    _corpus_stats(spark.read.parquet(f"{index_path}/doclens")).write.mode(
-        "overwrite"
-    ).parquet(f"{index_path}/stats")
-
-
 def _bm25_score(
     tf: DataFrame,
     dl: DataFrame,
+    n_docs: Column,
+    avgdl: Column,
     id_col: str,
     k1: float,
     b: float,
@@ -110,32 +119,27 @@ def _bm25_score(
 ) -> DataFrame:
     """Scoring dataflow shared by the in-plan form (bm25_search) and
     the persisted-index probe (bm25_probe): tf = (id, token, tf)
-    already filtered to the query terms, dl = (id, dl)."""
-    stats = _corpus_stats(dl)
+    already filtered to the query terms, dl = (id, dl), and the corpus
+    stats as scalar columns — a subquery over the in-plan dl, or the
+    manifest's literals."""
     df_t = tf.groupBy("token").agg(
         F.countDistinct(id_col).cast("double").alias("df")
     )
-    idf = df_t.crossJoin(F.broadcast(stats)).select(
+    idf = df_t.select(
         "token",
         F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
+            F.lit(1.0) + (n_docs - F.col("df") + 0.5) / (F.col("df") + 0.5)
         ).alias("idf"),
     )
     contrib = (
         tf.join(F.broadcast(idf), "token")
         .join(dl, id_col)
-        .crossJoin(F.broadcast(stats))
         .select(
             id_col,
             (
                 F.col("idf")
                 * (F.col("tf") * (k1 + 1))
-                / (
-                    F.col("tf")
-                    + k1
-                    * (1 - b + b * F.col("dl") / F.col("avgdl"))
-                )
+                / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / avgdl))
             )
             .cast("decimal(38,18)")
             .alias("term_score"),
@@ -152,6 +156,61 @@ def _bm25_score(
     )
 
 
+def _read_manifest(spark, index_path: str):
+    return spark.read.schema(
+        "n_docs DOUBLE, avgdl DOUBLE, n_buckets INT"
+    ).parquet(f"{index_path}/stats").first()
+
+
+def _read_doclens(spark, index_path: str, id_col: str) -> DataFrame:
+    return spark.read.schema(f"{id_col} BIGINT, dl BIGINT").parquet(
+        f"{index_path}/doclens"
+    )
+
+
+def _open_postings(
+    spark, index_path: str, id_col: str, n_buckets: int | None
+) -> DataFrame:
+    """Open the postings as the bucketed catalog table (a fresh session
+    re-registers it with one DDL) when `n_buckets` is set, else plain."""
+    from .scale import read_bucketed_index
+
+    schema = f"{id_col} BIGINT, token STRING, tf BIGINT"
+    if n_buckets is None:
+        return spark.read.schema(schema).parquet(f"{index_path}/postings")
+    return read_bucketed_index(
+        spark, f"{index_path}/postings", ["token"], n_buckets, schema
+    )
+
+
+def _write_index(
+    tf: DataFrame,
+    index_path: str,
+    id_col: str,
+    mode: str = "overwrite",
+    batch: int | None = None,
+    n_buckets: int | None = None,
+) -> None:
+    """Write (id, token, tf) rows, checkpointed once, as postings then
+    doclens — with save `mode`, under `batch=<id>/` if given, postings
+    bucketed (a full overwrite) if `n_buckets` — then the manifest."""
+    from .scale import write_bucketed_index
+
+    tf = tf.select(id_col, "token", "tf").localCheckpoint()
+    sub = "" if batch is None else f"/batch={batch}"
+    if n_buckets is None:
+        tf.write.mode(mode).parquet(f"{index_path}/postings{sub}")
+    else:
+        write_bucketed_index(tf, f"{index_path}/postings", ["token"], n_buckets)
+    tf.groupBy(id_col).agg(F.sum("tf").alias("dl")).write.mode(mode).parquet(
+        f"{index_path}/doclens{sub}"
+    )
+    dl = _read_doclens(tf.sparkSession, index_path, id_col)
+    _corpus_stats(dl).select(
+        "n_docs", "avgdl", F.lit(n_buckets).cast("int").alias("n_buckets")
+    ).write.mode("overwrite").parquet(f"{index_path}/stats")
+
+
 def build_postings_index(
     docs: DataFrame,
     index_path: str,
@@ -159,53 +218,17 @@ def build_postings_index(
     id_col: str = "doc_id",
     n_buckets: int | None = None,
 ) -> None:
-    """Materialize the inverted index bm25_search's docstring promises:
-    postings (id, token, tf), doc lengths (id, dl), and corpus stats
-    (n_docs, avgdl) as parquet under `index_path` — built ONCE from one
+    """Materialize the inverted index (module docstring) from one
     tokenize pass, probed per query by :func:`bm25_probe`.
-
-    ``n_buckets`` selects the 100 TB layout: postings persist
-    hash-bucketed and sorted by `token` (scale.write_bucketed_index),
-    so a probe's token IN-filter prunes to the matching buckets
-    (SelectedBucketsCount in the scan) and the per-token df aggregate
-    runs with no Exchange on the postings side.  Plain parquet
-    (default) still gets row-group pruning from the token predicate
-    pushdown (asserted in test_plans)."""
-    from .scale import write_bucketed_index
-
-    toks = _tokens(docs, text_col, id_col)
-    tf = toks.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf"))
-    spark = docs.sparkSession
-    if n_buckets is not None:
-        write_bucketed_index(
-            tf.select("token", id_col, "tf"),
-            f"{index_path}/postings", ["token"], n_buckets,
-        )
-        posted = _open_postings(spark, index_path, id_col, n_buckets)
-    else:
-        tf.write.mode("overwrite").parquet(f"{index_path}/postings")
-        posted = spark.read.parquet(f"{index_path}/postings")
-    dl = posted.groupBy(id_col).agg(F.sum("tf").alias("dl"))
-    dl.write.mode("overwrite").parquet(f"{index_path}/doclens")
-    _write_corpus_stats(spark, index_path)
-
-
-def _open_postings(
-    spark, index_path: str, id_col: str, n_buckets: int | None
-) -> DataFrame:
-    """Open the postings table in its written layout: bucketed catalog
-    table (re-registered in a fresh session — one DDL, no rewrite) when
-    `n_buckets` is set, plain parquet scan otherwise."""
-    from .scale import read_bucketed_index
-
-    if n_buckets is None:
-        return spark.read.parquet(f"{index_path}/postings")
-    return read_bucketed_index(
-        spark,
-        f"{index_path}/postings",
-        ["token"],
-        n_buckets,
-        f"token STRING, {id_col} BIGINT, tf BIGINT",
+    ``n_buckets`` selects the 100 TB layout: postings hash-bucketed and
+    sorted by `token` (scale.write_bucketed_index), so a probe's token
+    IN-filter prunes to the matching buckets and the per-token df
+    aggregate has no Exchange.  Plain parquet (default) still gets
+    row-group pruning from the pushed token predicate (test_plans).
+    The manifest records the layout; callers never repeat it."""
+    _write_index(
+        _term_freqs(docs, text_col, id_col), index_path, id_col,
+        n_buckets=n_buckets,
     )
 
 
@@ -217,23 +240,21 @@ def bm25_probe(
     k1: float = K1,
     b: float = B,
     top_k: int = 15,
-    n_buckets: int | None = None,
 ) -> DataFrame:
-    """Query the persisted postings index (build_postings_index): the
-    token IN-filter pushes into the postings parquet scan, so the
-    postings side reads only matching postings and the corpus text is
-    never read.  The doclens side is not narrowed: every probe
-    aggregates the whole doclens table for (n_docs, avgdl) and joins
-    it, so a probe costs O(indexed docs) on top of its postings.
-    Pass the index's `n_buckets` to probe the bucketed layout: the
-    IN-filter then prunes whole buckets and the df aggregate skips its
-    Exchange.  Result-identical to bm25_search over the same corpus
-    (parity pytest-asserted)."""
-    tf = _open_postings(spark, index_path, id_col, n_buckets).where(
+    """Query a persisted index.  One manifest read gives the postings
+    layout and the (n_docs, avgdl) literals, so no probe aggregates
+    doclens.  The token IN-filter pushes into the postings scan (and
+    prunes buckets); the corpus text is never read.  The doclens side
+    is not narrowed: the probe still joins the whole doclens table,
+    O(indexed docs) on top of its postings.  Result-identical to
+    bm25_search over the same corpus (parity pytest-asserted)."""
+    m = _read_manifest(spark, index_path)
+    tf = _open_postings(spark, index_path, id_col, m["n_buckets"]).where(
         F.col("token").isin(*query_terms)
     )
-    dl = spark.read.parquet(f"{index_path}/doclens")
-    return _bm25_score(tf, dl, id_col, k1, b, top_k)
+    dl = _read_doclens(spark, index_path, id_col)
+    n_docs, avgdl = F.lit(m["n_docs"]), F.lit(m["avgdl"])
+    return _bm25_score(tf, dl, n_docs, avgdl, id_col, k1, b, top_k)
 
 
 def vocab_coverage(
@@ -372,8 +393,7 @@ def tfidf_doc_pairs(
     token, so at 100 TB it is one bucketable equi-join plus a pair-keyed
     re-aggregation.
     """
-    toks = _tokens(docs, text_col, id_col)
-    tf = toks.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf"))
+    tf = _term_freqs(docs, text_col, id_col)
     n_docs = docs.where(F.col(text_col).isNotNull()).agg(
         F.count(F.lit(1)).cast("double").alias("n_docs")
     )
@@ -441,8 +461,8 @@ def update_postings_index(
 ) -> None:
     """Append-only incremental maintenance of a plain-layout postings
     index (build_postings_index): tokenize ONLY the new documents,
-    append their postings and doc-lengths as delta files, and refresh
-    the (tiny) corpus stats — the corpus already indexed is never
+    append their postings and doc-lengths as delta files, and rewrite
+    the one-row manifest — the corpus already indexed is never
     re-read, the exact seam `incremental_exact_dedup` uses for its
     fingerprint index.
 
@@ -453,17 +473,18 @@ def update_postings_index(
     error.  Parquet append = delta files in place: probes see base +
     deltas in one scan with no bookkeeping; run
     :func:`compact_postings_index` when small files accumulate.
-    Incremental maintenance targets the PLAIN layout — a bucketed base
-    (n_buckets) must stay rebuild-only/compact-to-bucketed, because
-    appended files would not carry its bucket metadata.
-
-    Not atomic across the three writes (postings append → doclens
-    append → stats overwrite); on a partial failure re-run compaction
-    from the surviving postings, which re-derives doclens and stats.
+    A bucketed index raises ValueError: appended files would not carry
+    its bucket layout, so it is rebuild-only.  A failed append is not
+    retryable (its delta files stay); compaction re-derives doclens and
+    the manifest from the surviving postings.
     """
     spark = new_docs.sparkSession
+    if _read_manifest(spark, index_path)["n_buckets"] is not None:
+        raise ValueError(
+            f"update_postings_index: {index_path} is bucketed (rebuild-only)"
+        )
     if assert_new_ids:
-        existing = spark.read.parquet(f"{index_path}/doclens").select(id_col)
+        existing = _read_doclens(spark, index_path, id_col).select(id_col)
         n_old = (
             new_docs.select(id_col).join(existing, id_col, "semi").count()
         )
@@ -472,16 +493,10 @@ def update_postings_index(
                 f"update_postings_index: {n_old} doc_ids already indexed "
                 f"under {index_path} (append-only contract)"
             )
-    toks = _tokens(new_docs, text_col, id_col)
-    tf = toks.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf"))
-    tf = tf.localCheckpoint()  # one tokenize pass feeds both appends
-    tf.select(id_col, "token", "tf").write.mode("append").parquet(
-        f"{index_path}/postings"
+    _write_index(
+        _term_freqs(new_docs, text_col, id_col), index_path, id_col,
+        mode="append",
     )
-    tf.groupBy(id_col).agg(F.sum("tf").alias("dl")).write.mode(
-        "append"
-    ).parquet(f"{index_path}/doclens")
-    _write_corpus_stats(spark, index_path)
 
 
 def compact_postings_index(
@@ -491,34 +506,26 @@ def compact_postings_index(
     n_buckets: int | None = None,
     n_files: int = 8,
 ) -> None:
-    """Compact an incrementally-grown postings index: rewrite base +
-    delta files into one fresh layout (plain `n_files`-file parquet, or
-    the bucketed-by-token 100 TB layout when `n_buckets` is set), then
-    atomically swap directories.  Doc-lengths and stats re-derive from
-    the compacted postings, so compaction is also the recovery path
-    after a partially-failed update.  The write-new-then-rename dance
-    is the local form of the pointer-swap a distributed store would do
-    — readers never observe a half-written index."""
-    from .scale import swap_directory, write_bucketed_index
+    """Compact an incrementally-grown postings index: rewrite its
+    postings, in any layout, as a fresh index beside it — plain
+    `n_files`-file parquet, or bucketed by token when `n_buckets` is set
+    — then swap the directories (scale.swap_directory), so readers
+    never observe a half-written index.  Doclens and the manifest
+    re-derive from the postings: compaction is also the recovery path
+    after a partially-failed update."""
+    from .scale import _index_table_name, swap_directory
 
-    posted = spark.read.parquet(f"{index_path}/postings")
-    tmp = f"{index_path}/postings__compact"
-    if n_buckets is not None:
-        write_bucketed_index(
-            posted.select("token", id_col, "tf"), tmp, ["token"], n_buckets
+    posted = _open_postings(spark, index_path, id_col, None)
+    if n_buckets is None:
+        posted = posted.repartition(n_files)
+    tmp = index_path.rstrip("/") + "__compact"
+    _write_index(posted, tmp, id_col, n_buckets=n_buckets)
+    swap_directory(tmp, index_path)
+    # the next probe re-registers the moved files from the manifest
+    for path in (tmp, index_path):
+        spark.sql(
+            f"DROP TABLE IF EXISTS {_index_table_name(f'{path}/postings')}"
         )
-    else:
-        posted.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    # rename-aside swap (see scale.swap_directory): a crash mid-swap
-    # always leaves a complete postings dir under either name
-    swap_directory(tmp, f"{index_path}/postings")
-    posted2 = _open_postings(spark, index_path, id_col, n_buckets)
-    posted2.groupBy(id_col).agg(F.sum("tf").alias("dl")).write.mode(
-        "overwrite"
-    ).parquet(f"{index_path}/doclens__compact_tmp")
-    # doclens is derived state: same rename-aside dance
-    swap_directory(f"{index_path}/doclens__compact_tmp", f"{index_path}/doclens")
-    _write_corpus_stats(spark, index_path)
 
 
 RRF_K = 60  # Cormack/Clarke/Buettcher 2009's constant; rank-60 damping
@@ -556,7 +563,7 @@ def hybrid_search_rrf(
     (id, rank) lists of ``per_side`` rows each, so the fused stage is
     constant-size no matter the corpus; all corpus-scale work lives in
     the two retrieval tiers, each already scale-shaped (BM25: filtered
-    postings + broadcast stats, the bm25_search dataflow; dense: one
+    postings + scalar stats, the bm25_search dataflow; dense: one
     broadcast query vector against a linear scan here, the ivf_knn /
     LSH-bucketed ANN tiers at real scale — RRF consumes any ranked
     list, so swapping the exact tier for an ANN tier changes recall,

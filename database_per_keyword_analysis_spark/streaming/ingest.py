@@ -101,28 +101,19 @@ def index_batch(
     id_col: str = "doc_id",
 ) -> None:
     """Add ONE micro-batch of documents to a streaming-maintained BM25
-    postings index: tokenize only the batch, overwrite its
-    `batch=<id>/` postings and doclens partitions (idempotent on retry
-    — the ingest-dedup exactly-once idiom), then refresh the tiny stats
-    table from the doclens union.  Doc_ids are append-only across the
-    stream (the checkpoint assigns each input file to exactly one
-    batch, so a retry rewrites the same ids into the same directory)."""
-    from ..operators.search import _tokens, _write_corpus_stats
+    index: the index writer (`search._write_index`) overwrites this
+    batch's `batch=<id>/` partitions, then the manifest.  Idempotent on
+    retry (the ingest-dedup exactly-once idiom): a batch that failed
+    before its manifest left the previous one in place, and its retry
+    rewrites the same partitions (fault-injection pytest-asserted).
+    Doc_ids are append-only across the stream: the checkpoint assigns
+    each input file to exactly one batch id."""
+    from ..operators.search import _term_freqs, _write_index
 
-    spark = batch_df.sparkSession
-    toks = _tokens(batch_df, text_col, id_col)
-    tf = (
-        toks.groupBy(id_col, "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
+    _write_index(
+        _term_freqs(batch_df, text_col, id_col), index_path, id_col,
+        batch=batch_id,
     )
-    tf.select(id_col, "token", "tf").write.mode("overwrite").parquet(
-        os.path.join(index_path, "postings", f"batch={batch_id}")
-    )
-    tf.groupBy(id_col).agg(F.sum("tf").alias("dl")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(index_path, "doclens", f"batch={batch_id}"))
-    _write_corpus_stats(spark, index_path)
 
 
 def run_streaming_index(
@@ -134,12 +125,9 @@ def run_streaming_index(
 ) -> None:
     """Maintain the BM25 postings index from a document stream:
     foreachBatch -> :func:`index_batch`, availableNow trigger (drain
-    then stop; continuous without it).  The maintained index lives in
-    the batch-partitioned delta layout — `bm25_probe` reads it directly
-    (the partition column is projected away), and
-    `search.compact_postings_index` converts it to the flat or bucketed
-    base layout once the stream quiesces (after which batch-mode
-    `update_postings_index` appends apply)."""
+    then stop; continuous without it).  `bm25_probe` reads the streamed
+    index directly; `search.compact_postings_index` converts it to the
+    flat or bucketed layout once the stream quiesces."""
     q = (
         docs_stream.writeStream.foreachBatch(
             lambda df, bid: index_batch(df, bid, index_path, text_col, id_col)

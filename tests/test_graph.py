@@ -267,6 +267,30 @@ def test_hits_fixed_contracts(spark):
     assert sorted(map(tuple, forced)) == sorted(map(tuple, rows))
 
 
+def test_hits_posture_counts_null_endpoints_as_nodes(spark, monkeypatch):
+    """The posture probe must count the populations hubs/auths iterate
+    over.  Their distinct() keeps a NULL endpoint as one node, so here
+    the NULLs lift the count from 2 to 4: past a threshold of 3 the
+    scores take the shuffle posture, and at 4 they broadcast."""
+    edges = spark.createDataFrame(
+        [("a", "b"), (None, "b"), ("a", None)], "src string, dst string"
+    )
+    real = G.F.broadcast
+    score_broadcasts = []
+
+    def spy(df):
+        if "score" in df.columns:
+            score_broadcasts.append(df)
+        return real(df)
+
+    monkeypatch.setattr(G.F, "broadcast", spy)
+    for limit, broadcast in ((3, False), (4, True)):
+        score_broadcasts.clear()
+        monkeypatch.setattr(G, "GRAPH_BROADCAST_MAX_NODES", limit)
+        G.hits_fixed(edges, iters=1)
+        assert bool(score_broadcasts) is broadcast, limit
+
+
 def test_hits_fused_and_two_probe_forms_are_bit_equal(spark):
     """r10 verdict item 3: the fused single-probe update (one
     union-keyed routing join per iteration) must be BIT-equal to the

@@ -268,6 +268,33 @@ def test_bm25_probe_pushes_token_filter_to_index_scan(spark, sf_dir):
     assert "PushedFilters: [In(token" in plan
 
 
+def test_bm25_probe_does_not_aggregate_doclens(spark, sf_dir):
+    """The probe scores with the manifest's (n_docs, avgdl), so every
+    doclens scan feeds the scoring join directly — an aggregate between
+    the scan and the join means each probe re-derives the corpus stats
+    from the whole doclens table."""
+    import re
+
+    lines = _plan(spark, sf_dir, "bm25_search_indexed").splitlines()
+
+    def col(line):  # column where the operator name starts
+        m = re.search(r"[+:]- ", line)
+        return m.end() if m else 0
+
+    scans = [i for i, ln in enumerate(lines) if "/doclens]" in ln]
+    assert scans, "\n".join(lines)
+    for i in scans:
+        above, c = [], col(lines[i])
+        for ln in reversed(lines[:i]):
+            if col(ln) < c:
+                above.append(ln[col(ln):].split("(")[0].split(" ")[0])
+                c = col(ln)
+                if above[-1].endswith("Join"):
+                    break
+        assert above[-1].endswith("Join"), above
+        assert not any("Aggregate" in op for op in above), above
+
+
 def test_round5_projections_have_no_aggregation_exchange(spark, sf_dir):
     # quality_classifier / c4_rule_filter are scan-stage projections:
     # the only exchanges allowed are the loader fan-out and final sort

@@ -148,7 +148,7 @@ def test_bucketed_postings_index_probe(spark, sf_dir, tmp_path):
     SRCH.build_postings_index(docs, idx, n_buckets=8)
 
     # probe parity with the in-plan scorer
-    probe = SRCH.bm25_probe(spark, idx, n_buckets=8)
+    probe = SRCH.bm25_probe(spark, idx)
     direct = SRCH.bm25_search(docs)
     assert sorted(map(tuple, probe.collect())) == sorted(
         map(tuple, direct.collect())

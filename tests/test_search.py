@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime as dt
 import math
 
+import pytest
 from pyspark.sql import Row
 
 from database_per_keyword_analysis_spark.operators import events as E
@@ -233,9 +234,7 @@ def test_compaction_preserves_results_plain_and_bucketed(spark, tmp_path):
     assert after_plain == before
     SRCH.compact_postings_index(spark, path, n_buckets=4)  # bucketed relayout
     after_bucketed = _rows(
-        SRCH.bm25_probe(
-            spark, path, query_terms=("hash", "join"), top_k=10, n_buckets=4
-        )
+        SRCH.bm25_probe(spark, path, query_terms=("hash", "join"), top_k=10)
     )
     assert after_bucketed == before
 
@@ -294,6 +293,103 @@ def test_streaming_index_maintenance_matches_batch(spark, tmp_path):
     assert _rows(
         SRCH.bm25_probe(spark, idx, query_terms=("hash", "join"), top_k=10)
     ) == full
+
+
+_INDEX_TEXTS = [
+    "hash join window", "hash hash stream", "join stream x",
+    "window y z hash", "stream stream join hash", "a b c",
+    "hash window", "join join join",
+]
+
+
+def _index_docs(spark):
+    return spark.createDataFrame(
+        [Row(doc_id=i, text=t) for i, t in enumerate(_INDEX_TEXTS)]
+    )
+
+
+def test_update_rejects_bucketed_index(spark, tmp_path):
+    """A bucketed index is rebuild-only: appended files would not carry
+    its bucket layout, so the bucketed probe would miss them while
+    scoring against the grown doclens.  The refused append leaves the
+    index as built."""
+    docs = _index_docs(spark)
+    path = str(tmp_path / "idx")
+    SRCH.build_postings_index(docs.where("doc_id < 4"), path, n_buckets=4)
+    with pytest.raises(ValueError, match="bucketed"):
+        SRCH.update_postings_index(docs.where("doc_id >= 4"), path)
+    built = SRCH.bm25_search(
+        docs.where("doc_id < 4"), query_terms=("hash", "join"), top_k=10
+    )
+    assert _rows(
+        SRCH.bm25_probe(spark, path, query_terms=("hash", "join"), top_k=10)
+    ) == _rows(built)
+
+
+def test_bucketed_probe_reads_its_layout_from_the_manifest(spark, tmp_path):
+    """The manifest records n_buckets, so a session whose catalog never
+    saw the build probes the bucketed layout with no layout argument
+    and returns bm25_search's rows."""
+    from database_per_keyword_analysis_spark.operators import scale as SC
+
+    docs = _index_docs(spark)
+    path = str(tmp_path / "idx")
+    SRCH.build_postings_index(docs, path, n_buckets=8)
+    assert SRCH._read_manifest(spark, path)["n_buckets"] == 8
+    table = SC._index_table_name(f"{path}/postings")
+    spark.sql(f"DROP TABLE IF EXISTS {table}")  # a catalog that never saw it
+    probe = SRCH.bm25_probe(spark, path, query_terms=("hash", "join"), top_k=10)
+    plan = probe._jdf.queryExecution().executedPlan().toString()
+    assert "SelectedBucketsCount" in plan, plan[:2000]
+    full = SRCH.bm25_search(docs, query_terms=("hash", "join"), top_k=10)
+    assert _rows(probe) == _rows(full)
+
+
+def test_index_batch_retry_after_a_fault_matches_the_no_fault_run(
+    spark, tmp_path, monkeypatch
+):
+    """The index writer fails once — after the postings write, then
+    after the doclens write — before the manifest.  The previous
+    manifest survives the fault, and retrying the batch leaves the same
+    manifest and probe rows as a run without the fault."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from database_per_keyword_analysis_spark.streaming import ingest as ING
+
+    docs = _index_docs(spark)
+    first, second = docs.where("doc_id < 4"), docs.where("doc_id >= 4")
+
+    def state(path):
+        probe = SRCH.bm25_probe(
+            spark, path, query_terms=("hash", "join"), top_k=10
+        )
+        return SRCH._read_manifest(spark, path)["n_docs"], _rows(probe)
+
+    ref = str(tmp_path / "no_fault")
+    ING.index_batch(first, 0, ref)
+    ING.index_batch(second, 1, ref)
+    expected = state(ref)
+    assert expected[0] == len(_INDEX_TEXTS)
+
+    write = DataFrameWriter.parquet
+    for next_part in ("doclens", "stats"):
+        path = str(tmp_path / f"fault_before_{next_part}")
+        ING.index_batch(first, 0, path)
+        armed = [True]
+
+        def failing(self, target, *args, _path=path, _part=next_part, **kw):
+            if armed[0] and target.startswith(f"{_path}/{_part}"):
+                armed[0] = False
+                raise RuntimeError(f"injected fault before {_part}")
+            return write(self, target, *args, **kw)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+        with pytest.raises(RuntimeError, match="injected fault"):
+            ING.index_batch(second, 1, path)
+        assert SRCH._read_manifest(spark, path)["n_docs"] == 4
+        ING.index_batch(second, 1, path)  # the retry
+        monkeypatch.setattr(DataFrameWriter, "parquet", write)
+        assert state(path) == expected, next_part
 
 
 def test_hybrid_rrf_hand_computed(spark):
