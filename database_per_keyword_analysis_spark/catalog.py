@@ -4240,21 +4240,18 @@ def _top_posts_all_sql(cfg: KeywordConfig, k: int = 5) -> str:
 def q_top_posts_per_industry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """stats_report's top-posts for ALL industries in one pass
     (main.py:427 looped per industry → one window over exploded labels)."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     docs = load(spark, sf_dir, "documents")
-    lab = K.classified(docs, CFG, channel_col="source").select(
-        F.explode(K.industry_labels(CFG)).alias("industry"),
+    rows = S.industry_rows(
+        K.classified(docs, CFG, channel_col="source"),
+        CFG,
         "doc_id",
         F.col("source").alias("channel"),
         F.col("n_chars").alias("views"),
     )
-    w = Window.partitionBy("industry").orderBy(F.desc("views"), F.asc("doc_id"))
-    return (
-        lab.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
-        .orderBy("industry", "rn")
+    return S.top_k_per_group(rows, "industry", "views", 5, "doc_id").orderBy(
+        "industry", "rn"
     )
 
 

@@ -8,11 +8,14 @@ The reference buckets with ``df.resample('D'/'W'/'M', on='full_date')``
   * 'M'  — calendar month, labeled by the month's LAST day;
   * empty buckets are implicitly present with count 0 (contiguous spine).
 
-Spark realization: a label expression per unit plus a generated
-date-spine (sequence + explode) left-joined so gaps appear as zero.  The
-spine is tiny (≤ a few thousand rows for decades of days) so the join is
-a broadcast; the aggregation itself is a plain groupBy with map-side
-partial combine — no skew risk since time is dense.
+Spark realization: a label expression per unit and a plain groupBy with
+map-side partial combine (no skew risk since time is dense).  One global
+aggregate then gathers the counts into a bucket → n map, one entry per
+non-empty bucket (≤ a few thousand for decades of days), with their
+first and last bucket.  The date spine (sequence + explode) is generated
+from that one row and looks each bucket up in the map, so gaps appear as
+zero.  The input is scanned once, and the spine lives in one partition,
+so the final sort is local (no range-partition sort job).
 """
 
 from __future__ import annotations
@@ -38,12 +41,15 @@ def bucket_label(ts_col: str | Column, unit: str) -> Column:
     raise ValueError(f"unit must be one of {UNITS}, got {unit!r}")
 
 
-def _spine(df: DataFrame, ts_col: str, unit: str) -> DataFrame:
-    """One row per bucket label between min and max of the data —
-    generated with sequence/explode, never collected to the driver."""
-    lo_hi = df.agg(
-        F.min(bucket_label(ts_col, unit)).alias("lo"),
-        F.max(bucket_label(ts_col, unit)).alias("hi"),
+def bucketed_counts(df: DataFrame, ts_col: str, unit: str) -> DataFrame:
+    """Counts per day/week/month bucket with zero-filled gaps (A7/W2;
+    main.py:812-816).  Returns (bucket DATE, n BIGINT) ordered by bucket.
+    Rows with a NULL timestamp are dropped; an input with no timestamp
+    gives no rows."""
+    counts = (
+        df.where(F.col(ts_col).isNotNull())
+        .groupBy(bucket_label(ts_col, unit).alias("bucket"))
+        .agg(F.count(F.lit(1)).alias("n"))
     )
     if unit == "day":
         seq = F.sequence("lo", "hi", F.expr("interval 1 day"))
@@ -54,18 +60,13 @@ def _spine(df: DataFrame, ts_col: str, unit: str) -> DataFrame:
             "transform(sequence(trunc(lo, 'MM'), trunc(hi, 'MM'), "
             "interval 1 month), x -> last_day(x))"
         )
-    return lo_hi.select(F.explode(seq).alias("bucket"))
-
-
-def bucketed_counts(df: DataFrame, ts_col: str, unit: str) -> DataFrame:
-    """Counts per day/week/month bucket with zero-filled gaps (A7/W2;
-    main.py:812-816).  Returns (bucket DATE, n BIGINT) ordered by bucket."""
-    counts = df.groupBy(bucket_label(ts_col, unit).alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
     return (
-        _spine(df, ts_col, unit)
-        .join(counts, "bucket", "left")
-        .select("bucket", F.coalesce("n", F.lit(0)).alias("n"))
+        counts.agg(
+            F.map_from_entries(F.collect_list(F.struct("bucket", "n"))).alias("m"),
+            F.min("bucket").alias("lo"),
+            F.max("bucket").alias("hi"),
+        )
+        .select("m", F.explode(seq).alias("bucket"))
+        .select("bucket", F.coalesce(F.col("m")[F.col("bucket")], F.lit(0)).alias("n"))
         .orderBy("bucket")
     )

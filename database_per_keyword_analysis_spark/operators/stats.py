@@ -15,8 +15,11 @@ we define ties broken by ascending id/name and mirror that in the oracle.
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from . import keywords as K
 
 
 def top_k_by(df: DataFrame, order_col: str, k: int, tiebreak: str) -> DataFrame:
@@ -89,6 +92,17 @@ def channel_audit(
     return top_k_per_group(restricted, channel_col, views_col, posts_per_channel, id_col)
 
 
+def industry_rows(flagged: DataFrame, cfg, *cols) -> DataFrame:
+    """A classified slice (`keywords.classified`) as one row per
+    (industry, post), the multi-label membership exploded
+    (main.py:320-324), carrying `cols`.  Hash-partitioned by industry,
+    so a chain of per-industry windows over it runs on this one shuffle
+    (W1; main.py:427 looped per industry)."""
+    return flagged.select(
+        F.explode(K.industry_labels(cfg)).alias("industry"), *cols
+    ).repartition("industry")
+
+
 def stats_report(
     df,
     cfg,
@@ -102,31 +116,65 @@ def stats_report(
     """The reference's composite reporting object
     (/root/reference/main.py:385-437): per industry — cleaned slice,
     count, top-k posts by views, top-k channels by summed views — as a
-    dict per industry.  The DataFrame entries (clean_df / top_posts /
-    top_channels) stay LAZY slices of one `keywords.classified` subtree.
-    Only `count` is an eager scalar (the reference's report shape,
-    main.py:426), and it is read from `keywords.industry_counts`: one
-    job for all industries, not one per industry.  Cache `df` upstream
-    if actioning many pieces at once.
-    """
-    from . import keywords as K
+    dict per industry.
 
+    Building it runs ONE Spark action for all industries: one chain of
+    windows over :func:`industry_rows` ranks every industry's posts and
+    channels and counts its posts, and the kept rows (about
+    |industries|·(top_posts_k + top_channels_k) of them) are fetched
+    once through Arrow.  `top_posts` (id, channel, views) and
+    `top_channels` (channel, total_views) are local frames over those
+    rows, so collecting them runs no job.  They equal `top_k_by` and
+    `top_channels_by_views` over the industry's slice: posts by views
+    desc then id asc, channels by summed views desc then name asc.
+    `clean_df` stays a lazy slice of the `keywords.classified` subtree.
+    """
     flagged = K.classified(df, cfg, text_col, channel_col)
-    counts = dict(K.industry_counts(df, cfg, text_col, channel_col).collect())
+    rows = industry_rows(flagged, cfg, id_col, channel_col, views_col)
+    industry = Window.partitionBy("industry")
+    channel = Window.partitionBy("industry", channel_col)
+    # one chain, not a union of branches: the optimizer prunes each
+    # branch's columns below the shuffle, and pruned branches no longer
+    # share it
+    ranked = rows.select(
+        "*",
+        F.row_number()
+        .over(industry.orderBy(F.desc(views_col), F.asc(id_col)))
+        .alias("post_rank"),
+        F.row_number().over(channel.orderBy(id_col)).alias("channel_row"),
+        F.sum(views_col).over(channel).alias("total_views"),
+        F.count(F.lit(1)).over(industry).alias("count"),
+    ).select(
+        "*",
+        # dense over rows = rank over channels: (total, name) is per channel
+        F.dense_rank()
+        .over(industry.orderBy(F.desc("total_views"), F.asc(channel_col)))
+        .alias("channel_rank"),
+    )
+    # every industry with a post keeps at least its first post, which
+    # carries `count` even when top_posts_k is 0
+    is_post = F.col("post_rank") <= max(top_posts_k, 1)
+    is_channel = (F.col("channel_row") == 1) & (F.col("channel_rank") <= top_channels_k)
+    table = ranked.where(is_post | is_channel).toArrow()
+
+    spark = df.sparkSession
     report = {}
-    for industry in cfg.industries:
-        sliced = flagged.where(F.col(K.flag_col(industry)))
-        report[industry] = {
-            "clean_df": sliced,
-            "count": counts[industry],
-            "top_posts": top_k_by(
-                sliced.select(id_col, channel_col, views_col),
-                views_col,
-                top_posts_k,
-                id_col,
+    for ind in cfg.industries:
+        part = table.filter(pc.field("industry") == ind)
+        posts = part.filter(pc.field("post_rank") <= top_posts_k).sort_by("post_rank")
+        channels = part.filter(
+            (pc.field("channel_row") == 1) & (pc.field("channel_rank") <= top_channels_k)
+        ).sort_by("channel_rank")
+        report[ind] = {
+            "clean_df": flagged.where(F.col(K.flag_col(ind))),
+            "count": part["count"][0].as_py() if part.num_rows else 0,
+            "top_posts": spark.createDataFrame(
+                posts.select([id_col, channel_col, views_col])
             ),
-            "top_channels": top_channels_by_views(
-                sliced, channel_col, views_col, top_channels_k
+            "top_channels": spark.createDataFrame(
+                channels.select([channel_col, "total_views"]).rename_columns(
+                    ["channel", "total_views"]
+                )
             ),
         }
     return report

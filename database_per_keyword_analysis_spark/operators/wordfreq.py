@@ -127,6 +127,9 @@ def word_frequency_by_industry(
     return (
         counted.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= top_n)
+        # at most (|industries| + 1)·top_n rows: sort them in one task
+        # rather than range-partition them (a sampling job plus a shuffle)
+        .coalesce(1)
         .orderBy("industry", "rn")
     )
 

@@ -15,6 +15,13 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# Generated classes Spark's code-generation cache keeps (Spark's default
+# is an LRU of 100).  Measured with perfbench: one keyword report
+# generates about 130 distinct classes and a serve_search run about 250.
+# At 100 a warm report cycles the LRU and recompiles (Janino, then the
+# JIT again) about 90 of its classes every time; at 1000 it compiles none.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(
     app_name: str = "dpka-spark",
@@ -65,6 +72,7 @@ def get_spark(
         # seed).  `true` is Spark's default; pinning it here protects
         # against a caller override.  scale.py re-asserts at runtime.
         .config("spark.sql.exchange.reuse", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # events.parquet carries TIMESTAMP(NANOS), which Spark rejects by

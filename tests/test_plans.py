@@ -25,6 +25,15 @@ def test_keyword_scan_pushes_notnull_and_prunes(spark, sf_dir):
     assert "n_chars" not in read and "lang" not in read and "doc_id" not in read
 
 
+def test_bucketed_counts_scans_its_input_once(spark, sf_dir):
+    """The zero-filled spine takes its ends from the counts, so the plan
+    reads the events once and sorts its output locally, with no range
+    partitioning."""
+    plan = _plan(spark, sf_dir, "events_daily_counts")
+    assert plan.count("FileScan parquet") == 1
+    assert "rangepartitioning" not in plan
+
+
 def test_pricing_summary_pushes_range_filter(spark, sf_dir):
     df = catalog.queries()["pricing_summary"](spark, sf_dir)
     df.collect()  # finalize THIS dataset's AQE plan (a write would clone it)

@@ -92,6 +92,127 @@ def test_stats_report_composite(spark):
     assert [(r.channel, r.total_views) for r in ch] == [("b", 35)]
 
 
+def _sql_executions_and_jobs(spark, fn):
+    """Run `fn` and return (SQL executions it started, jobs it ran),
+    read from the session's SQL status store and the job tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(tag, tag)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    recent = store.executionsList(max(0, n - 50), 50)
+    executions = sum(
+        1 for i in range(recent.size()) if recent.apply(i).description() == tag
+    )
+    return executions, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+_CONTRACT_ROWS = [
+    # (post_id, channel, views, text)
+    (1, "a", 10, "steel up"),
+    (2, "b", 30, "steel water"),  # in two industries
+    (3, "spam", 99, "steel spam"),  # blacklisted channel (when configured)
+    (4, "b", 5, "water only"),
+    (5, None, 30, "steel and water"),  # NULL channel
+    (6, "c", 30, "steel c"),  # ties post 2 and 5 on views: id decides
+    (7, "A", 5, "water a"),
+    (8, "d", 35, "water d"),  # channel d ties channel b's water total
+    (9, "x", 7, "nothing to see"),  # no keyword
+    (10, "e", None, "steel e"),  # NULL views
+    (11, "spam", 50, "oil spam"),
+]
+
+
+@pytest.mark.parametrize(
+    "industries,blacklist",
+    [
+        ({"Steel": ["steel"], "Water": ["water"], "Gold": ["gold"]}, ["SPAM"]),
+        (
+            {
+                "Steel": ["steel"],
+                "Water": ["water"],
+                "Gold": ["gold"],
+                "Oil": ["oil"],
+                "Any": ["a", "e"],
+            },
+            [],
+        ),
+    ],
+)
+def test_stats_report_is_one_action_and_matches_the_per_industry_reference(
+    spark, industries, blacklist
+):
+    """stats_report builds every industry's pieces with ONE Spark action,
+    whatever the number of industries; its top-k frames are local (no job
+    to collect); and every piece equals the per-industry formulation
+    (`top_k_by` / `top_channels_by_views` over the industry's flag slice,
+    the count of that slice), schema included.  Covers a zero-hit
+    industry (Gold), a post in two industries, tied views (id asc), tied
+    channel totals (name asc), a NULL channel, NULL views and a
+    blacklisted channel."""
+    from pyspark.sql import functions as F
+
+    from database_per_keyword_analysis_spark.config import KeywordConfig
+    from database_per_keyword_analysis_spark.operators import keywords as K
+
+    cfg = KeywordConfig(industry_keywords=industries, channel_blacklist=blacklist)
+    df = spark.createDataFrame(
+        _CONTRACT_ROWS, "post_id long, channel_username string, views long, text string"
+    )
+    kw = dict(top_posts_k=3, top_channels_k=3)
+    built = {}
+    executions, jobs = _sql_executions_and_jobs(
+        spark, lambda: built.update(rep=S.stats_report(df, cfg, **kw))
+    )
+    assert executions == 1
+    assert jobs >= 1
+    rep = built["rep"]
+    assert set(rep) == set(industries)
+
+    got = {}
+    _, jobs = _sql_executions_and_jobs(
+        spark,
+        lambda: got.update(
+            {
+                i: (v["top_posts"].collect(), v["top_channels"].collect())
+                for i, v in rep.items()
+            }
+        ),
+    )
+    assert jobs == 0
+
+    flagged = K.classified(df, cfg, channel_col="channel_username")
+    for industry in industries:
+        sliced = flagged.where(F.col(K.flag_col(industry)))
+        posts = S.top_k_by(
+            sliced.select("post_id", "channel_username", "views"),
+            "views",
+            kw["top_posts_k"],
+            "post_id",
+        )
+        channels = S.top_channels_by_views(
+            sliced, "channel_username", "views", kw["top_channels_k"]
+        )
+        assert rep[industry]["count"] == sliced.count(), industry
+        assert got[industry] == (posts.collect(), channels.collect()), industry
+        assert rep[industry]["top_posts"].schema == posts.schema
+        assert rep[industry]["top_channels"].schema == channels.schema
+        assert rep[industry]["clean_df"].collect() == sliced.collect()
+    assert rep["Gold"]["count"] == 0
+    assert got["Gold"] == ([], [])
+    # the ties resolved as documented; the blacklist also drops the NULL
+    # channel, since NOT IN over NULL is not true
+    assert [r.post_id for r in got["Steel"][0]] == ([2, 6, 1] if blacklist else [3, 2, 5])
+    assert [r.channel for r in got["Water"][1]] == ["b", "d", "A" if blacklist else None]
+
+
 def test_frequent_pairs_apriori_contracts(spark):
     """r10 market-basket contracts: duplicate (basket, item) rows count
     once; pairs below min_support are dropped even when both items are

@@ -60,3 +60,36 @@ def test_week_label_is_sunday(spark):
     assert len(out) == 1
     assert out[0].bucket == dt.date(2024, 1, 14)
     assert out[0].n == 7
+
+
+@pytest.mark.parametrize("unit", TU.UNITS)
+def test_null_timestamps_are_dropped(spark, unit):
+    """A NULL timestamp has no bucket: the row is dropped, not counted
+    and not an error (a map keyed by bucket cannot hold a NULL key)."""
+    df = spark.createDataFrame(
+        [(dt.datetime(2024, 1, 1),), (None,), (dt.datetime(2024, 1, 3),), (None,)],
+        "ts timestamp",
+    )
+    out = TU.bucketed_counts(df, "ts", unit).collect()
+    assert sum(r.n for r in out) == 2
+    assert all(r.bucket is not None for r in out)
+
+
+@pytest.mark.parametrize("rows", [[], [(None,), (None,)]], ids=["empty", "all_null"])
+def test_no_timestamps_give_no_rows(spark, rows):
+    df = spark.createDataFrame(rows, "ts timestamp")
+    for unit in TU.UNITS:
+        assert TU.bucketed_counts(df, "ts", unit).collect() == []
+
+
+def test_single_bucket_gives_one_row(spark):
+    df = spark.createDataFrame(
+        [(dt.datetime(2024, 2, 10, h),) for h in (1, 5, 23)], "ts timestamp"
+    )
+    for unit, label in [
+        ("day", dt.date(2024, 2, 10)),
+        ("week", dt.date(2024, 2, 11)),
+        ("month", dt.date(2024, 2, 29)),
+    ]:
+        out = TU.bucketed_counts(df, "ts", unit).collect()
+        assert [(r.bucket, r.n) for r in out] == [(label, 3)]
