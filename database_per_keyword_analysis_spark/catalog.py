@@ -3447,22 +3447,12 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine pairs + connected-components keeper decision over embeddings
     (operators/similarity.py:semantic_dedup).
 
-    Cluster-once/dedup-many: shares the persisted .cache/ivf index with
-    ivf_knn (same sf_dir/n_lists/seed key), so only the first call per
-    fixture pays k-means + the assignment pass."""
-    import hashlib
-    import os
-
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|lists=16|seed=42|b{_IVF_BUCKETS}".encode()
-    ).hexdigest()[:12]
-    idx = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".cache", "ivf", key,
-    )
+    Cluster-once/dedup-many: shares the persisted index of
+    `_ivf_index_path` with ivf_knn, so only the first call per fixture
+    pays k-means + the assignment pass."""
     return SIM.semantic_dedup(
-        _load_emb(spark, sf_dir), threshold=0.4, index_path=idx,
-        n_buckets=_IVF_BUCKETS,
+        _load_emb(spark, sf_dir), threshold=0.4,
+        index_path=_ivf_index_path(spark, sf_dir),
     )
 
 
@@ -4103,33 +4093,16 @@ def q_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-k: coarse k-means quantizer, n_probe nearest
     lists searched per query (operators/similarity.py:ivf_knn).
 
-    Train-once/probe-many: the index (assignment parquet partitioned by
-    list_id + centroids parquet) is built on the FIRST call for an sf_dir
-    and persisted under .cache/ivf/; every later call — including across
-    processes — is a pruned parquet scan plus the probe joins, no k-means,
-    no assignment UDF."""
-    import hashlib
-    import os
-
+    Train-once/probe-many: the index of `_ivf_index_path` is built on
+    the FIRST call for an sf_dir; every later call — including across
+    processes — is a bucket-pruned parquet scan plus the probe joins, no
+    k-means, no assignment UDF."""
     from pyspark.sql import functions as F
 
-    from .operators import similarity as SIM
-    from .sources import fan_out
-
-    # r15: force fan-out past the loader's 2 MiB floor — embeddings at
-    # sf0.1 is 0.78 MB, so parallel=True was a no-op and the per-row
-    # decimal vector math ran single-task (measured 3.72 → 1.31 s,
-    # paired floor-sweep ratio 0.352; no-op at scale where the scan
-    # naturally splits)
-    emb = fan_out(load(spark, sf_dir, "embeddings"), min_bytes=0)
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|lists=16|seed=42|b{_IVF_BUCKETS}".encode()
-    ).hexdigest()[:12]
-    idx = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                       ".cache", "ivf", key)
+    emb = _load_emb(spark, sf_dir)
     return SIM.ivf_knn(
-        emb, emb.where(F.col("vec_id") < 10), k=5, index_path=idx,
-        n_buckets=_IVF_BUCKETS,
+        emb, emb.where(F.col("vec_id") < 10), k=5,
+        index_path=_ivf_index_path(spark, sf_dir),
     )
 
 
@@ -4776,8 +4749,28 @@ _BM25_BUCKETS = 8
 
 # shared IVF index layout for the registered semantic_dedup / ivf_knn:
 # bucketed by list_id (exchange-free candidate self-join, bucket-pruned
-# probes); both queries key the same .cache/ivf index
+# probes)
 _IVF_BUCKETS = 8
+
+
+def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
+    """The sf_dir embeddings' IVF index, shared by semantic_dedup and
+    ivf_knn, built bucketed on first use.  The format tag `manifest-v1`
+    in the key keeps an index of an older format from being opened."""
+    import hashlib
+    import os
+
+    key = hashlib.md5(
+        f"{os.path.abspath(sf_dir)}|manifest-v1|lists=16|seed=42"
+        f"|b{_IVF_BUCKETS}".encode()
+    ).hexdigest()[:12]
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.path.join(root, ".cache", "ivf", key)
+    if not SIM.ivf_index_exists(spark, path):
+        SIM.ivf_index(
+            _load_emb(spark, sf_dir), index_path=path, n_buckets=_IVF_BUCKETS
+        )
+    return path
 
 
 @register("bm25_search_indexed", _bm25_sql())

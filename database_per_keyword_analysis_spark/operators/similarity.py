@@ -422,6 +422,12 @@ def _kmeans_np(X, k: int, seed: int, max_iter: int = 20, tol: float = 1e-6):
     return C
 
 
+# The IVF index manifest, `centroids/` under `index_path`: one parquet
+# file, a row per list; `n_buckets` (NULL when plain) and `assigned`'s
+# schema DDL repeat on every row.
+_MANIFEST = "list_id INT, centroid ARRAY<DOUBLE>, n_buckets INT, schema STRING"
+
+
 def ivf_index(
     vectors: DataFrame,
     n_lists: int = 16,
@@ -449,16 +455,12 @@ def ivf_index(
 
     With `index_path` set this is the "train once, probe many" seam: the
     assignment is written as parquet PARTITIONED BY list_id (probes prune
-    to the n_probe lists they touch) plus a tiny centroids parquet, and
-    subsequent `ivf_load`/`ivf_knn(index_path=...)` calls skip training
-    and the per-row assignment UDF entirely — they just scan files.
-
-    `n_buckets` (with `index_path`) selects the BUCKETED layout
-    instead: assignments hash-bucketed and sorted by list_id
-    (scale.write_bucketed_index), so semantic_dedup's self-equi-join on
-    list_id runs with NO Exchange on either side and a list_id filter
-    prunes whole buckets — the 100 TB probe layout.  Load it back with
-    the same `n_buckets`.
+    to the n_probe lists they touch) or, with `n_buckets`, hash-bucketed
+    and sorted by list_id (scale.write_bucketed_index) so semantic_dedup's
+    self-equi-join on list_id has NO Exchange and a list_id filter prunes
+    whole buckets — the 100 TB probe layout.  The manifest (`_MANIFEST`)
+    is written last and records the layout, so no caller repeats it and
+    a build that fails before it leaves no index.
     """
     import numpy as np
 
@@ -474,24 +476,24 @@ def ivf_index(
     centroids = [list(map(float, c)) for c in C]
 
     assigned = ivf_assign(vectors, centroids, vec_col, id_col)
-    if index_path is not None:
-        from .scale import write_bucketed_index
+    if index_path is None:
+        return assigned, centroids
+    from .scale import write_bucketed_index
 
-        spark = vectors.sparkSession
-        if n_buckets is not None:
-            write_bucketed_index(
-                assigned.select("list_id", id_col, vec_col),
-                index_path + "/assigned", ["list_id"], n_buckets,
-            )
-        else:
-            assigned.write.mode("overwrite").partitionBy("list_id").parquet(
-                index_path + "/assigned"
-            )
-        _centroid_df(spark, centroids).write.mode("overwrite").parquet(
-            index_path + "/centroids"
+    spark = vectors.sparkSession
+    if n_buckets is None:
+        assigned.write.mode("overwrite").partitionBy("list_id").parquet(
+            index_path + "/assigned"
         )
-        return ivf_load(spark, index_path, id_col=id_col, n_buckets=n_buckets)
-    return assigned, centroids
+    else:
+        write_bucketed_index(
+            assigned, index_path + "/assigned", ["list_id"], n_buckets
+        )
+    ddl = assigned.schema.toDDL()
+    spark.createDataFrame(
+        [(i, c, n_buckets, ddl) for i, c in enumerate(centroids)], _MANIFEST
+    ).coalesce(1).write.mode("overwrite").parquet(index_path + "/centroids")
+    return ivf_load(spark, index_path)
 
 
 def ivf_assign(
@@ -533,20 +535,23 @@ def ivf_add(
     and append them into the list_id-partitioned assignment layout.
     Probes see old + new vectors with no bookkeeping: appends land as
     extra files inside the matching `list_id=` partitions, so partition
-    pruning keeps working.  Targets the PLAIN partitioned layout — a
-    bucketed index (n_buckets) stays rebuild-only, the
-    update_postings_index rule.
+    pruning keeps working.  Targets the PLAIN partitioned layout: a
+    bucketed index raises ValueError (rebuild-only, the
+    update_postings_index rule).
 
     With `assert_new_ids` (default) an id semi-join against the
     existing assignment turns silent double-insertion into an error —
     the append-only contract shared with the postings/fingerprint
     index maintainers."""
     spark = new_vectors.sparkSession
-    assigned, centroids = ivf_load(spark, index_path, id_col=id_col)
+    centroids, n_buckets, schema = _read_manifest(spark, index_path)
+    if n_buckets is not None:
+        raise ValueError(f"ivf_add: {index_path} is bucketed (rebuild-only)")
     if assert_new_ids:
+        existing = spark.read.schema(schema).parquet(index_path + "/assigned")
         n_old = (
             new_vectors.select(id_col)
-            .join(assigned.select(id_col), id_col, "semi")
+            .join(existing.select(id_col), id_col, "semi")
             .count()
         )
         if n_old:
@@ -559,44 +564,59 @@ def ivf_add(
     ).partitionBy("list_id").parquet(index_path + "/assigned")
 
 
-def ivf_load(
-    spark, index_path: str, id_col: str = "vec_id", n_buckets: int | None = None
-):
-    """Load a persisted IVF index built by `ivf_index(index_path=...)`.
-    Returns the same (assigned, centroids) pair; `assigned` is a plain
-    parquet scan partitioned by list_id — probing never re-runs training
-    or the assignment UDF.  Pass the index's `n_buckets` to open the
-    bucketed layout (re-registered per session, exchange-free list_id
-    joins)."""
-    if n_buckets is not None:
-        from .scale import read_bucketed_index
+def _read_manifest(spark, index_path: str):
+    """(centroids in list_id order, n_buckets, assigned schema DDL) from
+    one explicit-schema read of the manifest, sorted on the driver."""
+    rows = sorted(
+        spark.read.schema(_MANIFEST).parquet(index_path + "/centroids").collect(),
+        key=lambda r: r.list_id,
+    )
+    centroids = [list(r.centroid) for r in rows]
+    return centroids, rows[0].n_buckets, rows[0].schema
 
-        assigned = read_bucketed_index(
-            spark, index_path + "/assigned", ["list_id"], n_buckets
-        )
+
+def ivf_load(spark, index_path: str):
+    """Open a persisted IVF index built by `ivf_index(index_path=...)`
+    as the same (assigned, centroids) pair, in one Spark job: the
+    manifest is read once with an explicit schema and sorted on the
+    driver, and `assigned` opens in the recorded layout and schema (a
+    bucketed table is re-registered with one DDL in a session that has
+    not seen it).  Never re-runs training or the assignment UDF."""
+    from .scale import read_bucketed_index
+
+    centroids, n_buckets, schema = _read_manifest(spark, index_path)
+    if n_buckets is None:
+        assigned = spark.read.schema(schema).parquet(index_path + "/assigned")
     else:
-        assigned = spark.read.parquet(index_path + "/assigned")
-    cent = spark.read.parquet(index_path + "/centroids").orderBy("list_id").collect()
-    centroids = [list(r.centroid) for r in cent]
+        assigned = read_bucketed_index(
+            spark, index_path + "/assigned", ["list_id"], n_buckets, schema
+        )
     return assigned, centroids
 
 
 def ivf_index_exists(spark, index_path: str) -> bool:
-    """True when a complete persisted index (both parquet writes committed)
-    is present at `index_path` on any Hadoop-visible filesystem."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    ok = True
-    for part in ("/assigned", "/centroids"):
-        p = jvm.org.apache.hadoop.fs.Path(index_path + part + "/_SUCCESS")
-        ok = ok and p.getFileSystem(conf).exists(p)
-    return ok
+    """True when the manifest is committed at `index_path` on any
+    Hadoop-visible filesystem.  `ivf_index` writes it after the
+    assignment, so a build that failed before it reads as absent."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(index_path + "/centroids/_SUCCESS")
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
 
 
 def _centroid_df(spark, centroids: list[list[float]]) -> DataFrame:
     return spark.createDataFrame(
         [(i, c) for i, c in enumerate(centroids)], ["list_id", "centroid"]
     ).withColumn("centroid", F.col("centroid").cast("array<double>"))
+
+
+def _load_or_build(vectors, index_path, n_lists, vec_col, id_col, seed):
+    """The committed index at `index_path` in its recorded layout, else
+    one built from `vectors` (persisted plain at `index_path` if set)."""
+    spark = vectors.sparkSession
+    if index_path is not None and ivf_index_exists(spark, index_path):
+        return ivf_load(spark, index_path)
+    return ivf_index(
+        vectors, n_lists, vec_col, id_col, seed, index_path=index_path
+    )
 
 
 def ivf_knn(
@@ -609,29 +629,20 @@ def ivf_knn(
     id_col: str = "vec_id",
     seed: int = 42,
     index_path: str | None = None,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """IVF-probed approximate top-k cosine: each query searches only its
     `n_probe` nearest inverted lists instead of the whole corpus —
     compare ~n_probe/n_lists of the candidates of brute force.
 
-    With `index_path` set, a persisted index there is REUSED (train once,
-    probe many — no k-means, no assignment pass; the probe is a pruned
-    parquet scan); absent one, the index is built and persisted there for
-    every later call.  Without a path, build is inline (the labeled
-    baseline form).  `n_buckets` selects the bucketed index layout
-    (list_id bucket pruning instead of directory-partition pruning).
+    With `index_path` set, a committed index there is REUSED in its
+    recorded layout (train once, probe many — no k-means, no assignment
+    pass; the probe is a pruned parquet scan); absent one, the index is
+    built and persisted there, plain, for every later call.  Without a
+    path, build is inline (the labeled baseline form).
     """
-    spark = vectors.sparkSession
-    if index_path is not None and ivf_index_exists(spark, index_path):
-        assigned, centroids = ivf_load(
-            spark, index_path, id_col=id_col, n_buckets=n_buckets
-        )
-    else:
-        assigned, centroids = ivf_index(
-            vectors, n_lists, vec_col, id_col, seed,
-            index_path=index_path, n_buckets=n_buckets,
-        )
+    assigned, centroids = _load_or_build(
+        vectors, index_path, n_lists, vec_col, id_col, seed
+    )
     return ivf_probe(
         assigned, centroids, queries, k, n_probe, vec_col, id_col
     )
@@ -717,7 +728,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     seed: int = 42,
     index_path: str | None = None,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """Semantic dedup decision per vector: cluster the corpus with the
     IVF coarse quantizer (deterministic k-means, `ivf_index`), compare
@@ -740,21 +750,15 @@ def semantic_dedup(
     that trades recall for join fan-out.  Assignment is one broadcast
     argmin pass (ivf_index); the group reduction shuffles only the
     surviving pair list.
+
+    `index_path` is ivf_knn's cluster-once/dedup-many seam (a bucketed
+    index makes the self-join Exchange-free).
     """
     from . import dedup as DD
 
-    spark = vectors.sparkSession
-    if index_path is not None and ivf_index_exists(spark, index_path):
-        # cluster-once/dedup-many: reuse a committed IVF index (same
-        # persistence seam as ivf_knn) — no k-means, no assignment UDF
-        assigned, _ = ivf_load(
-            spark, index_path, id_col=id_col, n_buckets=n_buckets
-        )
-    else:
-        assigned, _ = ivf_index(
-            vectors, n_lists=n_lists, vec_col=vec_col, id_col=id_col,
-            seed=seed, index_path=index_path, n_buckets=n_buckets,
-        )
+    assigned, _ = _load_or_build(
+        vectors, index_path, n_lists, vec_col, id_col, seed
+    )
     a = assigned.select(
         "list_id",
         F.col(id_col).alias("vec_a"),

@@ -204,9 +204,7 @@ def test_bucketed_ivf_self_join_exchange_free(spark, sf_dir, tmp_path):
 
     # bucketed semantic_dedup decisions equal the plain-layout tier
     plain = SIM.semantic_dedup(emb, threshold=0.4, n_lists=4)
-    bucketed = SIM.semantic_dedup(
-        emb, threshold=0.4, n_lists=4, index_path=idx, n_buckets=8
-    )
+    bucketed = SIM.semantic_dedup(emb, threshold=0.4, n_lists=4, index_path=idx)
     assert sorted(map(tuple, plain.collect())) == sorted(
         map(tuple, bucketed.collect())
     )

@@ -236,6 +236,119 @@ def test_ivf_add_rejects_existing_ids(spark, sf_dir, tmp_path):
         SIM.ivf_add(vectors.where("vec_id < 5"), path)
 
 
+def _sorted_rows(df, *cols):
+    return sorted(map(tuple, df.select(*cols).collect()))
+
+
+def test_ivf_add_rejects_a_bucketed_index(spark, sf_dir, tmp_path):
+    """A bucketed index is rebuild-only: appended files would not carry
+    its bucket layout.  The refused add leaves every original vector in
+    the index."""
+    vectors = load(spark, sf_dir, "embeddings")
+    first = vectors.where("vec_id < 400")
+    path = str(tmp_path / "ivf")
+    SIM.ivf_index(first, n_lists=4, index_path=path, n_buckets=8)
+    with pytest.raises(ValueError, match="bucketed"):
+        SIM.ivf_add(vectors.where("vec_id >= 400"), path)
+    assigned, _ = SIM.ivf_load(spark, path)
+    assert _sorted_rows(assigned, "vec_id") == _sorted_rows(first, "vec_id")
+
+
+def test_bucketed_ivf_opens_its_recorded_layout_in_a_fresh_catalog(
+    spark, sf_dir, tmp_path
+):
+    """The manifest records n_buckets, so a session whose catalog never
+    saw the build opens the bucketed layout with no layout argument:
+    the list_id self-join has no Exchange and returns a plain build's
+    rows."""
+    from database_per_keyword_analysis_spark.operators import scale as SC
+
+    emb = load(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "ivf_bucketed")
+    SIM.ivf_index(emb, n_lists=4, index_path=path, n_buckets=8)
+    spark.sql(f"DROP TABLE IF EXISTS {SC._index_table_name(path + '/assigned')}")
+    assigned, centroids = SIM.ivf_load(spark, path)
+    plain, plain_centroids = SIM.ivf_index(emb, n_lists=4)
+    assert centroids == plain_centroids
+
+    def self_join(df):
+        a = df.select("list_id", F.col("vec_id").alias("vec_a"))
+        b = df.select("list_id", F.col("vec_id").alias("vec_b"))
+        return a.hint("merge").join(b, "list_id")
+
+    joined = self_join(assigned)
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan[:2000]
+    cols = ("list_id", "vec_a", "vec_b")
+    assert _sorted_rows(joined, *cols) == _sorted_rows(self_join(plain), *cols)
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs `fn` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = f"ivf-{uuid.uuid4().hex}"
+    sc.setJobGroup(tag, tag)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+@pytest.mark.parametrize("n_buckets", [None, 8])
+def test_a_warm_ivf_load_runs_at_most_one_job(
+    spark, sf_dir, tmp_path, n_buckets
+):
+    """ivf_load reads the manifest once with an explicit schema and
+    sorts the centroids on the driver; `assigned` opens with the
+    recorded schema, so no job infers one."""
+    path = str(tmp_path / "ivf")
+    emb = load(spark, sf_dir, "embeddings")
+    SIM.ivf_index(emb, n_lists=4, index_path=path, n_buckets=n_buckets)
+    SIM.ivf_load(spark, path)
+    assert _jobs(spark, lambda: SIM.ivf_load(spark, path)) <= 1
+
+
+def test_an_ivf_build_that_fails_before_its_manifest_leaves_no_index(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """ivf_index writes the manifest last.  A build that fails after
+    committing `assigned` leaves ivf_index_exists False, and a retried
+    ivf_knn builds the index and returns the rows of a run with no
+    fault."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    emb = load(spark, sf_dir, "embeddings")
+    queries = emb.where("vec_id < 5")
+    cols = ("query_id", "neighbor_id", "cosine", "rank")
+
+    def knn(path):
+        return SIM.ivf_knn(emb, queries, k=3, n_lists=4, index_path=path)
+
+    expected = _sorted_rows(knn(str(tmp_path / "no_fault")), *cols)
+    path = str(tmp_path / "fault")
+    write = DataFrameWriter.parquet
+
+    def failing(self, target, *args, **kw):
+        if target == path + "/centroids":
+            raise RuntimeError("injected fault before the manifest")
+        return write(self, target, *args, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(RuntimeError, match="injected fault"):
+        knn(path)
+    monkeypatch.setattr(DataFrameWriter, "parquet", write)
+    assert os.path.exists(path + "/assigned/_SUCCESS")
+    assert not SIM.ivf_index_exists(spark, path)
+    assert _sorted_rows(knn(path), *cols) == expected
+    assert SIM.ivf_index_exists(spark, path)
+
+
 def test_lsh_n_planes_derivation():
     """Bucket count tracks N (round-6 judge item 4): the derivation
     reproduces the historical 6-plane default at fixture N and the
