@@ -4731,12 +4731,14 @@ def q_stream_jsonl_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _postings_index_path(sf_dir: str) -> str:
     """Persisted BM25 postings-index path keyed on corpus identity —
     the build-once/query-many seam shared with the IVF and winnowing
-    indexes."""
+    indexes.  The format tag in the key keeps an index of an older
+    format from being opened."""
     import hashlib
     import os
 
     key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|postings|b{_BM25_BUCKETS}".encode()
+        f"{os.path.abspath(sf_dir)}|postings|{SRCH._FORMAT}"
+        f"|b{_BM25_BUCKETS}".encode()
     ).hexdigest()[:12]
     return os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "..", ".cache", f"bm25_{key}")

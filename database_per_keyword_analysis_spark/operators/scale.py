@@ -224,6 +224,51 @@ def read_bucketed_index(
     return spark.table(table)
 
 
+# One entry per manifest path: (file listing, rows).  Every parquet
+# write names its part files after a fresh job UUID, so each commit
+# lists differently and replaces the entry on its next read.  No lock:
+# rows are read after their listing, so a racing reader can store at
+# worst rows newer than their key, which the next listing replaces.
+_MANIFESTS: dict[str, tuple[tuple, list]] = {}
+
+
+def _hadoop_path(spark, path: str):
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
+def read_manifest(spark, path: str, schema_ddl: str) -> list | None:
+    """Rows of the small parquet manifest committed at `path` (read with
+    `schema_ddl`), or None when none is (no `_SUCCESS`).  The directory
+    listing, taken through the Hadoop FileSystem with no Spark job, keys
+    a per-path cache, so the rows are read once per commit."""
+    p, fs = _hadoop_path(spark, path)
+    if not fs.exists(p):
+        return None
+    key = tuple(
+        sorted(
+            (s.getPath().getName(), s.getModificationTime())
+            for s in fs.listStatus(p)
+        )
+    )
+    if "_SUCCESS" not in (name for name, _ in key):
+        return None
+    hit = _MANIFESTS.get(path)
+    if hit is None or hit[0] != key:
+        hit = key, spark.read.schema(schema_ddl).parquet(path).collect()
+        _MANIFESTS[path] = hit
+    return hit[1]
+
+
+def drop_manifest(spark, path: str) -> None:
+    """Delete the manifest at `path`: a rebuild's first step, so a
+    rebuild that fails before writing its own manifest leaves no index
+    rather than the old manifest over new data."""
+    _MANIFESTS.pop(path, None)
+    p, fs = _hadoop_path(spark, path)
+    fs.delete(p, True)
+
+
 ZORDER_BITS = 16
 
 

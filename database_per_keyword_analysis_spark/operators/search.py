@@ -18,9 +18,10 @@ Scale shape (100 TB):
 * bm25_search — one tokenize pass; doc lengths from a per-doc count
   (map-side combine); the query-term postings table is filtered BEFORE
   its groupBy, so the shuffled tf table holds only docs containing a
-  query term; per-term document frequencies reduce to |q| rows and
-  broadcast back; corpus stats (N, avgdl) attach as a scalar subquery.
-  The only full-corpus shuffle is the doc-length aggregate.
+  query term, and joins its doc lengths; per-term document frequencies
+  are a count window over those rows; corpus stats (N, avgdl) attach
+  as a scalar subquery.  The only full-corpus shuffle is the
+  doc-length aggregate.
 * vocab_coverage — distributed token count, then TakeOrdered limits the
   ranked vocabulary to top_n rows before the cumulative-sum window, so
   the single-partition prefix sum only ever sees top_n rows (bounded by
@@ -30,12 +31,19 @@ Scale shape (100 TB):
 The persisted BM25 index has one writer, `_write_index` (behind
 build/update/compact_postings_index and streaming.ingest.index_batch),
 and one reader, bm25_probe.  Under `index_path`: postings/ (id, token,
-tf) — plain, bucketed by token, or `batch=<id>/` partitions; doclens/
-(id, dl) from the same rows; stats/, the manifest (n_docs, avgdl,
-n_buckets; n_buckets NULL unless bucketed), written LAST over the whole
-doclens table — a writer that fails earlier leaves the previous
-manifest, and re-running it repairs the index.  A probe reads the
-manifest once and scores with its values.  Ids are BIGINT.
+tf, dl) — plain, bucketed by token, or `batch=<id>/` partitions, with
+each doc's length dl counted before the explode, so it costs no
+shuffle; doclens/ (id, dl) from the same rows, read only to derive the
+manifest's (n_docs, avgdl) and for update_postings_index's id check;
+stats/, the manifest (n_docs, avgdl, n_buckets, format; n_buckets NULL
+unless bucketed), written LAST over the whole doclens table.  A full
+rebuild deletes the manifest first, so a rebuild that fails leaves no
+index; an append or batch that fails earlier leaves the previous
+manifest, and re-running it repairs the index.  A probe scores the
+postings alone with the manifest's values, read once per commit
+(scale.read_manifest); an index whose manifest lacks this `format`
+predates `dl` on postings and raises ValueError.  Ids are BIGINT and
+unique per document.
 """
 
 from __future__ import annotations
@@ -51,12 +59,13 @@ K1 = 1.2
 B = 0.75
 
 
+def _words(text_col: str) -> Column:
+    return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+
+
 def _tokens(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return docs.where(F.col(text_col).isNotNull()).select(
-        id_col,
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias(
-            "token"
-        ),
+        id_col, F.explode(_words(text_col)).alias("token")
     )
 
 
@@ -83,19 +92,30 @@ def bm25_search(
     """
     toks = _tokens(docs, text_col, id_col)
     dl = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl"))
-    tf = (
+    post = (
         toks.where(F.col("token").isin(*query_terms))
         .groupBy(id_col, "token")
         .agg(F.count(F.lit(1)).alias("tf"))
+        .join(dl, id_col)
     )
     s = _corpus_stats(dl).select(F.struct("n_docs", "avgdl")).scalar()
-    return _bm25_score(tf, dl, s["n_docs"], s["avgdl"], id_col, k1, b, top_k)
+    return _bm25_score(post, s["n_docs"], s["avgdl"], id_col, k1, b, top_k)
 
 
 def _term_freqs(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, token, tf) over every token of every doc."""
-    return _tokens(docs, text_col, id_col).groupBy(id_col, "token").agg(
-        F.count(F.lit(1)).alias("tf")
+    """(id, token, tf, dl) over every token of every doc.  dl, the doc's
+    token count, is the size of its token array taken before the
+    explode, so it rides the tf aggregate with no second shuffle."""
+    return (
+        docs.where(F.col(text_col).isNotNull())
+        .select(id_col, _words(text_col).alias("_w"))
+        .select(
+            id_col,
+            F.size("_w").cast("long").alias("dl"),
+            F.explode("_w").alias("token"),
+        )
+        .groupBy(id_col, "token")
+        .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
     )
 
 
@@ -108,8 +128,7 @@ def _corpus_stats(dl: DataFrame) -> DataFrame:
 
 
 def _bm25_score(
-    tf: DataFrame,
-    dl: DataFrame,
+    post: DataFrame,
     n_docs: Column,
     avgdl: Column,
     id_col: str,
@@ -118,32 +137,25 @@ def _bm25_score(
     top_k: int,
 ) -> DataFrame:
     """Scoring dataflow shared by the in-plan form (bm25_search) and
-    the persisted-index probe (bm25_probe): tf = (id, token, tf)
-    already filtered to the query terms, dl = (id, dl), and the corpus
-    stats as scalar columns — a subquery over the in-plan dl, or the
-    manifest's literals."""
-    df_t = tf.groupBy("token").agg(
-        F.countDistinct(id_col).cast("double").alias("df")
+    the persisted-index probe (bm25_probe): `post` = (id, token, tf, dl)
+    rows already filtered to the query terms, and the corpus stats as
+    scalar columns — a subquery over the in-plan dl, or the manifest's
+    literals.  (id, token) is unique, so df(t) is a count window over
+    `post`: no aggregate joined back, and no Exchange when the rows
+    arrive bucketed by token."""
+    df = F.count(F.lit(1)).over(Window.partitionBy("token"))
+    idf = F.log(
+        F.lit(1.0) + (n_docs - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
-    idf = df_t.select(
-        "token",
-        F.log(
-            F.lit(1.0) + (n_docs - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        ).alias("idf"),
-    )
-    contrib = (
-        tf.join(F.broadcast(idf), "token")
-        .join(dl, id_col)
-        .select(
-            id_col,
-            (
-                F.col("idf")
-                * (F.col("tf") * (k1 + 1))
-                / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / avgdl))
-            )
-            .cast("decimal(38,18)")
-            .alias("term_score"),
+    contrib = post.withColumn("df", df.cast("double")).select(
+        id_col,
+        (
+            idf
+            * (F.col("tf") * (k1 + 1))
+            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / avgdl))
         )
+        .cast("decimal(38,18)")
+        .alias("term_score"),
     )
     return (
         contrib.groupBy(id_col)
@@ -156,10 +168,29 @@ def _bm25_score(
     )
 
 
-def _read_manifest(spark, index_path: str):
-    return spark.read.schema(
-        "n_docs DOUBLE, avgdl DOUBLE, n_buckets INT"
-    ).parquet(f"{index_path}/stats").first()
+# The BM25 manifest, `stats/` under `index_path`: one row.  `format`
+# names the postings layout; a manifest without it predates `dl`.
+_FORMAT = "postings-dl-v1"
+_MANIFEST = "n_docs DOUBLE, avgdl DOUBLE, n_buckets INT, format STRING"
+
+
+def _read_manifest(spark, index_path: str, missing_ok: bool = False):
+    """The manifest row, read once per commit; None (with `missing_ok`)
+    or FileNotFoundError when none is committed, ValueError when it is
+    of an older format."""
+    from .scale import read_manifest
+
+    rows = read_manifest(spark, f"{index_path}/stats", _MANIFEST)
+    if rows is None:
+        if missing_ok:
+            return None
+        raise FileNotFoundError(f"no BM25 index manifest under {index_path}")
+    if rows[0]["format"] != _FORMAT:
+        raise ValueError(
+            f"{index_path}: BM25 index of an older format (postings "
+            "without dl); rebuild it"
+        )
+    return rows[0]
 
 
 def _read_doclens(spark, index_path: str, id_col: str) -> DataFrame:
@@ -175,7 +206,7 @@ def _open_postings(
     re-registers it with one DDL) when `n_buckets` is set, else plain."""
     from .scale import read_bucketed_index
 
-    schema = f"{id_col} BIGINT, token STRING, tf BIGINT"
+    schema = f"{id_col} BIGINT, token STRING, tf BIGINT, dl BIGINT"
     if n_buckets is None:
         return spark.read.schema(schema).parquet(f"{index_path}/postings")
     return read_bucketed_index(
@@ -184,30 +215,42 @@ def _open_postings(
 
 
 def _write_index(
-    tf: DataFrame,
+    post: DataFrame,
     index_path: str,
     id_col: str,
     mode: str = "overwrite",
     batch: int | None = None,
     n_buckets: int | None = None,
 ) -> None:
-    """Write (id, token, tf) rows, checkpointed once, as postings then
-    doclens — with save `mode`, under `batch=<id>/` if given, postings
-    bucketed (a full overwrite) if `n_buckets` — then the manifest."""
-    from .scale import write_bucketed_index
+    """Write (id, token, tf, dl) rows, checkpointed once, as postings
+    then doclens — with save `mode`, under `batch=<id>/` if given,
+    postings bucketed (a full overwrite) if `n_buckets` — then the
+    manifest.  A full overwrite first deletes the manifest; an append
+    or batch first checks that an existing one is of this format."""
+    from .scale import drop_manifest, write_bucketed_index
 
-    tf = tf.select(id_col, "token", "tf").localCheckpoint()
+    spark = post.sparkSession
+    if mode == "overwrite" and batch is None:
+        drop_manifest(spark, f"{index_path}/stats")
+    else:
+        _read_manifest(spark, index_path, missing_ok=True)
+    post = post.select(id_col, "token", "tf", "dl").localCheckpoint()
     sub = "" if batch is None else f"/batch={batch}"
     if n_buckets is None:
-        tf.write.mode(mode).parquet(f"{index_path}/postings{sub}")
+        post.write.mode(mode).parquet(f"{index_path}/postings{sub}")
     else:
-        write_bucketed_index(tf, f"{index_path}/postings", ["token"], n_buckets)
-    tf.groupBy(id_col).agg(F.sum("tf").alias("dl")).write.mode(mode).parquet(
-        f"{index_path}/doclens{sub}"
-    )
-    dl = _read_doclens(tf.sparkSession, index_path, id_col)
+        write_bucketed_index(
+            post, f"{index_path}/postings", ["token"], n_buckets
+        )
+    post.groupBy(id_col).agg(F.max("dl").alias("dl")).write.mode(
+        mode
+    ).parquet(f"{index_path}/doclens{sub}")
+    dl = _read_doclens(spark, index_path, id_col)
     _corpus_stats(dl).select(
-        "n_docs", "avgdl", F.lit(n_buckets).cast("int").alias("n_buckets")
+        "n_docs",
+        "avgdl",
+        F.lit(n_buckets).cast("int").alias("n_buckets"),
+        F.lit(_FORMAT).alias("format"),
     ).write.mode("overwrite").parquet(f"{index_path}/stats")
 
 
@@ -223,9 +266,11 @@ def build_postings_index(
     ``n_buckets`` selects the 100 TB layout: postings hash-bucketed and
     sorted by `token` (scale.write_bucketed_index), so a probe's token
     IN-filter prunes to the matching buckets and the per-token df
-    aggregate has no Exchange.  Plain parquet (default) still gets
+    window has no Exchange.  Plain parquet (default) still gets
     row-group pruning from the pushed token predicate (test_plans).
-    The manifest records the layout; callers never repeat it."""
+    The manifest records the layout; callers never repeat it.  Over an
+    existing index this is a rebuild in place: the old manifest is
+    deleted first, so a failed rebuild leaves no index."""
     _write_index(
         _term_freqs(docs, text_col, id_col), index_path, id_col,
         n_buckets=n_buckets,
@@ -241,20 +286,21 @@ def bm25_probe(
     b: float = B,
     top_k: int = 15,
 ) -> DataFrame:
-    """Query a persisted index.  One manifest read gives the postings
-    layout and the (n_docs, avgdl) literals, so no probe aggregates
-    doclens.  The token IN-filter pushes into the postings scan (and
-    prunes buckets); the corpus text is never read.  The doclens side
-    is not narrowed: the probe still joins the whole doclens table,
-    O(indexed docs) on top of its postings.  Result-identical to
+    """Query a persisted index.  The token IN-filter pushes into the
+    postings scan (and prunes buckets), and the matching postings carry
+    their dl, so the probe scores them alone: it reads neither doclens
+    nor the corpus text.  The manifest, read once per commit, gives the
+    layout and the (n_docs, avgdl) literals, so a warm probe runs at
+    most 3 Spark jobs (a bucketed one 2: its token window needs no
+    Exchange).  Raises FileNotFoundError when no index is committed and
+    ValueError on an index of an older format.  Result-identical to
     bm25_search over the same corpus (parity pytest-asserted)."""
     m = _read_manifest(spark, index_path)
-    tf = _open_postings(spark, index_path, id_col, m["n_buckets"]).where(
+    post = _open_postings(spark, index_path, id_col, m["n_buckets"]).where(
         F.col("token").isin(*query_terms)
     )
-    dl = _read_doclens(spark, index_path, id_col)
     n_docs, avgdl = F.lit(m["n_docs"]), F.lit(m["avgdl"])
-    return _bm25_score(tf, dl, n_docs, avgdl, id_col, k1, b, top_k)
+    return _bm25_score(post, n_docs, avgdl, id_col, k1, b, top_k)
 
 
 def vocab_coverage(
@@ -512,9 +558,12 @@ def compact_postings_index(
     — then swap the directories (scale.swap_directory), so readers
     never observe a half-written index.  Doclens and the manifest
     re-derive from the postings: compaction is also the recovery path
-    after a partially-failed update."""
+    after a partially-failed update (a failed rebuild leaves no
+    manifest and is re-run instead).  An index of an older format
+    raises ValueError."""
     from .scale import _index_table_name, swap_directory
 
+    _read_manifest(spark, index_path)
     posted = _open_postings(spark, index_path, id_col, None)
     if n_buckets is None:
         posted = posted.repartition(n_files)

@@ -24,7 +24,12 @@ import pandas as pd  # noqa: F401 — resolves pandas_udf type hints under futur
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .scale import ALL_PAIRS_DEFAULT_CAP, assert_all_pairs_safe
+from .scale import (
+    ALL_PAIRS_DEFAULT_CAP,
+    assert_all_pairs_safe,
+    drop_manifest,
+    read_manifest,
+)
 
 # 28,12 leaves precision headroom: decimal(28,12)+decimal(28,12) →
 # decimal(29,12), re-cast in the merge so the accumulator type is stable
@@ -53,8 +58,13 @@ def _dot_dbl(a: str, b: str) -> Column:
     )
 
 
-def with_norm(vecs: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return vecs.withColumn("norm", F.sqrt(_dot_dec(vec_col, vec_col)))
+def _dot_py(a, b) -> float:
+    """`_dot_dbl` on the driver: the same double products summed left
+    to right from 0.0, so the value is bit-identical."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += float(x) * float(y)
+    return acc
 
 
 def knn_bruteforce(
@@ -460,7 +470,9 @@ def ivf_index(
     self-equi-join on list_id has NO Exchange and a list_id filter prunes
     whole buckets — the 100 TB probe layout.  The manifest (`_MANIFEST`)
     is written last and records the layout, so no caller repeats it and
-    a build that fails before it leaves no index.
+    a build that fails before it leaves no index; over an existing index
+    the old manifest is deleted before `assigned` is rewritten, so a
+    failed rebuild leaves no index either.
     """
     import numpy as np
 
@@ -481,6 +493,7 @@ def ivf_index(
     from .scale import write_bucketed_index
 
     spark = vectors.sparkSession
+    drop_manifest(spark, index_path + "/centroids")
     if n_buckets is None:
         assigned.write.mode("overwrite").partitionBy("list_id").parquet(
             index_path + "/assigned"
@@ -566,22 +579,24 @@ def ivf_add(
 
 def _read_manifest(spark, index_path: str):
     """(centroids in list_id order, n_buckets, assigned schema DDL) from
-    one explicit-schema read of the manifest, sorted on the driver."""
-    rows = sorted(
-        spark.read.schema(_MANIFEST).parquet(index_path + "/centroids").collect(),
-        key=lambda r: r.list_id,
-    )
+    the manifest, read once per commit (scale.read_manifest) and sorted
+    on the driver."""
+    rows = read_manifest(spark, index_path + "/centroids", _MANIFEST)
+    if rows is None:
+        raise FileNotFoundError(f"no IVF index manifest under {index_path}")
+    rows = sorted(rows, key=lambda r: r.list_id)
     centroids = [list(r.centroid) for r in rows]
     return centroids, rows[0].n_buckets, rows[0].schema
 
 
 def ivf_load(spark, index_path: str):
     """Open a persisted IVF index built by `ivf_index(index_path=...)`
-    as the same (assigned, centroids) pair, in one Spark job: the
-    manifest is read once with an explicit schema and sorted on the
-    driver, and `assigned` opens in the recorded layout and schema (a
-    bucketed table is re-registered with one DDL in a session that has
-    not seen it).  Never re-runs training or the assignment UDF."""
+    as the same (assigned, centroids) pair.  The manifest is read with
+    an explicit schema once per commit (one Spark job; none while it is
+    unchanged) and sorted on the driver, and `assigned` opens in the
+    recorded layout and schema (a bucketed table is re-registered with
+    one DDL in a session that has not seen it).  Never re-runs training
+    or the assignment UDF."""
     from .scale import read_bucketed_index
 
     centroids, n_buckets, schema = _read_manifest(spark, index_path)
@@ -600,12 +615,6 @@ def ivf_index_exists(spark, index_path: str) -> bool:
     assignment, so a build that failed before it reads as absent."""
     p = spark._jvm.org.apache.hadoop.fs.Path(index_path + "/centroids/_SUCCESS")
     return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
-
-
-def _centroid_df(spark, centroids: list[list[float]]) -> DataFrame:
-    return spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)], ["list_id", "centroid"]
-    ).withColumn("centroid", F.col("centroid").cast("array<double>"))
 
 
 def _load_or_build(vectors, index_path, n_lists, vec_col, id_col, seed):
@@ -657,39 +666,45 @@ def ivf_probe(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Probe stage of IVF: rank centroids per query, search the n_probe
-    nearest inverted lists.  All joins after assignment are equi-joins on
-    `list_id` (partition-pruned when `assigned` is a parquet index
-    partitioned by list_id); the query→probe-list fan-out is broadcast
-    (|Q|·n_probe rows)."""
-    spark = assigned.sparkSession
-    cent = _centroid_df(spark, centroids)
+    """Probe stage of IVF: search each query's n_probe nearest inverted
+    lists.  `queries` is request-sized — one row per request, ten in
+    the catalog, at most twenty in tests — and is fetched to the driver
+    once.  There the centroids are ranked per query by the assignment
+    metric (min ||q−c||² ⇔ max 2 q·c − ||c||², ties to the lower
+    list_id) in `_dot_dbl`'s double arithmetic, so `assigned` is read
+    with a literal `list_id IN (…)` that prunes partitions or buckets
+    at plan time.  The |Q|·n_probe (query, list) rows broadcast into an
+    equi-join on list_id, top-k per query takes one shuffle, and the
+    final ≤|Q|·k rows sort in one task.  A corpus-sized query set is
+    semantic_dedup's list_id self-join, not a probe."""
+    import math
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_emb"),
-        F.sqrt(_dot_dbl(vec_col, vec_col)).alias("q_norm"),
-    )
-    # rank centroids per query by the ASSIGNMENT metric (euclidean:
-    # min ||q−c||² ⇔ max 2 q·c − ||c||²) → keep n_probe
-    qc = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn(
-            "c_score",
-            2.0 * _dot_dbl("q_emb", "centroid") - _dot_dbl("centroid", "centroid"),
+    import pyarrow as pa
+
+    cc = [_dot_py(c, c) for c in centroids]
+    probes = []
+    for r in queries.select(id_col, vec_col).collect():
+        q = [float(x) for x in r[vec_col]]
+        ranked = sorted(
+            range(len(centroids)),
+            key=lambda i: (-(2.0 * _dot_py(q, centroids[i]) - cc[i]), i),
         )
-        .withColumn(
-            "c_rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("c_score"), F.asc("list_id")
-                )
-            ),
+        q_norm = math.sqrt(_dot_py(q, q))
+        probes += [(r[id_col], i, q, q_norm) for i in ranked[:n_probe]]
+    query_id, list_id, q_emb, q_norm = zip(*probes) if probes else ([],) * 4
+    # from Arrow, a LocalRelation: no Python RDD, no runtime pruning subquery
+    qc = assigned.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "query_id": pa.array(query_id),
+                "list_id": pa.array(list_id, pa.int32()),
+                "q_emb": pa.array(q_emb, pa.list_(pa.float64())),
+                "q_norm": pa.array(q_norm, pa.float64()),
+            }
         )
-        .where(F.col("c_rank") <= n_probe)
-        .select("query_id", "q_emb", "q_norm", "list_id")
-    )
-    cand = assigned.select(
+    ).withColumn("query_id", F.col("query_id").cast(queries.schema[id_col].dataType))
+    lists = sorted(set(list_id))
+    cand = assigned.where(F.col("list_id").isin(*lists)).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_emb"), "list_id"
     )
     scored = (
@@ -709,6 +724,7 @@ def ivf_probe(
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")
+        .coalesce(1)
         .orderBy("query_id", "rank")
     )
 

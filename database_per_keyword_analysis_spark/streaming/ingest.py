@@ -101,8 +101,10 @@ def index_batch(
     id_col: str = "doc_id",
 ) -> None:
     """Add ONE micro-batch of documents to a streaming-maintained BM25
-    index: the index writer (`search._write_index`) overwrites this
-    batch's `batch=<id>/` partitions, then the manifest.  Idempotent on
+    index: the index writer (`search._write_index`) checks that an
+    existing manifest is of the current format (an older one raises
+    ValueError), overwrites this batch's `batch=<id>/` partitions, then
+    the manifest.  Idempotent on
     retry (the ingest-dedup exactly-once idiom): a batch that failed
     before its manifest left the previous one in place, and its retry
     rewrites the same partitions (fault-injection pytest-asserted).

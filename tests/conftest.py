@@ -14,3 +14,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """count_jobs(fn): the Spark jobs `fn()` runs, counted through a job
+    group (the tests/test_stats.py idiom)."""
+    import uuid
+
+    def count(fn) -> int:
+        sc = spark.sparkContext
+        tag = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(tag, tag)
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    return count

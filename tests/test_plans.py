@@ -277,31 +277,16 @@ def test_bm25_probe_pushes_token_filter_to_index_scan(spark, sf_dir):
     assert "PushedFilters: [In(token" in plan
 
 
-def test_bm25_probe_does_not_aggregate_doclens(spark, sf_dir):
-    """The probe scores with the manifest's (n_docs, avgdl), so every
-    doclens scan feeds the scoring join directly — an aggregate between
-    the scan and the join means each probe re-derives the corpus stats
-    from the whole doclens table."""
-    import re
-
+def test_bm25_probe_reads_no_doclens(spark, sf_dir):
+    """The postings carry each doc's dl, so the probe scans no doclens,
+    and over the bucketed postings the per-token df window has no
+    Exchange between it and the bucketed scan."""
     lines = _plan(spark, sf_dir, "bm25_search_indexed").splitlines()
-
-    def col(line):  # column where the operator name starts
-        m = re.search(r"[+:]- ", line)
-        return m.end() if m else 0
-
-    scans = [i for i, ln in enumerate(lines) if "/doclens]" in ln]
-    assert scans, "\n".join(lines)
-    for i in scans:
-        above, c = [], col(lines[i])
-        for ln in reversed(lines[:i]):
-            if col(ln) < c:
-                above.append(ln[col(ln):].split("(")[0].split(" ")[0])
-                c = col(ln)
-                if above[-1].endswith("Join"):
-                    break
-        assert above[-1].endswith("Join"), above
-        assert not any("Aggregate" in op for op in above), above
+    assert not any("/doclens]" in ln for ln in lines), "\n".join(lines)
+    win = next(i for i, ln in enumerate(lines) if "Window [" in ln)
+    scan = next(i for i in range(win, len(lines)) if "FileScan" in lines[i])
+    assert "Bucketed: true" in lines[scan], lines[scan]
+    assert not any("Exchange" in ln for ln in lines[win:scan]), "\n".join(lines)
 
 
 def test_round5_projections_have_no_aggregation_exchange(spark, sf_dir):

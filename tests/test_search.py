@@ -392,6 +392,128 @@ def test_index_batch_retry_after_a_fault_matches_the_no_fault_run(
         assert state(path) == expected, next_part
 
 
+def _probe(spark, path, terms=("hash", "join")):
+    return SRCH.bm25_probe(spark, path, query_terms=terms, top_k=10)
+
+
+def test_an_index_of_the_older_format_raises(spark, tmp_path):
+    """An index written before postings carried dl has postings
+    (doc_id, token, tf) and a manifest with no format.  Probing,
+    updating, compacting or extending it raises ValueError instead of
+    scoring with a NULL dl."""
+    from database_per_keyword_analysis_spark.streaming import ingest as ING
+
+    docs = _index_docs(spark)
+    path = str(tmp_path / "old")
+    tf = (
+        SRCH._tokens(docs.where("doc_id < 4"), "text", "doc_id")
+        .groupBy("doc_id", "token")
+        .count()
+        .withColumnRenamed("count", "tf")
+    )
+    tf.write.parquet(f"{path}/postings")
+    tf.groupBy("doc_id").agg({"tf": "sum"}).toDF("doc_id", "dl").write.parquet(
+        f"{path}/doclens"
+    )
+    spark.createDataFrame(
+        [(4.0, 3.0, None)], "n_docs DOUBLE, avgdl DOUBLE, n_buckets INT"
+    ).write.parquet(f"{path}/stats")
+    with pytest.raises(ValueError, match="older format"):
+        _probe(spark, path).collect()
+    with pytest.raises(ValueError, match="older format"):
+        SRCH.update_postings_index(docs.where("doc_id >= 4"), path)
+    with pytest.raises(ValueError, match="older format"):
+        SRCH.compact_postings_index(spark, path)
+    with pytest.raises(ValueError, match="older format"):
+        ING.index_batch(docs.where("doc_id >= 4"), 1, path)
+
+
+@pytest.mark.parametrize("next_part", ["doclens", "stats"])
+def test_a_rebuild_that_fails_before_its_manifest_leaves_no_index(
+    spark, tmp_path, monkeypatch, next_part
+):
+    """A rebuild over an existing index deletes the old manifest before
+    it writes postings.  Failing after the postings write leaves no
+    index, not the old manifest over new postings, and the retried
+    rebuild equals a rebuild with no fault."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    docs = _index_docs(spark)
+    ref = str(tmp_path / "no_fault")
+    SRCH.build_postings_index(docs, ref)
+    expected = SRCH._read_manifest(spark, ref)["n_docs"], _rows(_probe(spark, ref))
+
+    path = str(tmp_path / "fault")
+    SRCH.build_postings_index(docs.where("doc_id < 4"), path)
+    assert _probe(spark, path).count() > 0  # the old manifest, cached
+    write = DataFrameWriter.parquet
+
+    def failing(self, target, *args, **kw):
+        if target.startswith(f"{path}/{next_part}"):
+            raise RuntimeError(f"injected fault before {next_part}")
+        return write(self, target, *args, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(RuntimeError, match="injected fault"):
+        SRCH.build_postings_index(docs, path)
+    monkeypatch.setattr(DataFrameWriter, "parquet", write)
+    with pytest.raises(FileNotFoundError):
+        _probe(spark, path)
+    SRCH.build_postings_index(docs, path)  # the retry
+    got = SRCH._read_manifest(spark, path)["n_docs"], _rows(_probe(spark, path))
+    assert got == expected
+
+
+@pytest.mark.parametrize("n_buckets", [None, 8])
+def test_a_warm_bm25_probe_runs_at_most_three_jobs(
+    spark, tmp_path, count_jobs, n_buckets
+):
+    """The manifest is read once per commit and the postings carry dl,
+    so a warm probe runs only its own stages: no manifest read, no
+    doclens join, no idf aggregate."""
+    docs = _index_docs(spark)
+    path = str(tmp_path / "idx")
+    SRCH.build_postings_index(docs, path, n_buckets=n_buckets)
+    _probe(spark, path).collect()
+    assert count_jobs(lambda: _probe(spark, path).collect()) <= 3
+
+
+def test_a_probe_after_index_batch_sees_the_new_commit(spark, tmp_path):
+    """The manifest cache is keyed on the manifest's file listing, so a
+    probe after the next batch sees its n_docs and its fresh term."""
+    from database_per_keyword_analysis_spark.streaming import ingest as ING
+
+    docs = _index_docs(spark)
+    fresh = spark.createDataFrame([Row(doc_id=100, text="zebra hash")])
+    path = str(tmp_path / "idx")
+    ING.index_batch(docs.where("doc_id < 4"), 0, path)
+    assert _probe(spark, path, ("zebra",)).count() == 0
+    assert SRCH._read_manifest(spark, path)["n_docs"] == 4
+    ING.index_batch(docs.where("doc_id >= 4").unionByName(fresh), 1, path)
+    assert SRCH._read_manifest(spark, path)["n_docs"] == len(_INDEX_TEXTS) + 1
+    assert [r.doc_id for r in _probe(spark, path, ("zebra",)).collect()] == [100]
+    full = SRCH.bm25_search(
+        docs.unionByName(fresh), query_terms=("hash", "join"), top_k=10
+    )
+    assert _rows(_probe(spark, path)) == _rows(full)
+
+
+def test_a_rebuild_in_another_layout_opens_that_layout(spark, tmp_path):
+    """A plain index probed (its manifest cached), then rebuilt bucketed
+    at the same path: the next probe opens the bucketed layout."""
+    docs = _index_docs(spark)
+    path = str(tmp_path / "idx")
+    SRCH.build_postings_index(docs.where("doc_id < 4"), path)
+    assert SRCH._read_manifest(spark, path)["n_buckets"] is None
+    _probe(spark, path).collect()
+    SRCH.build_postings_index(docs, path, n_buckets=8)
+    probe = _probe(spark, path)
+    plan = probe._jdf.queryExecution().executedPlan().toString()
+    assert "SelectedBucketsCount" in plan, plan[:2000]
+    full = SRCH.bm25_search(docs, query_terms=("hash", "join"), top_k=10)
+    assert _rows(probe) == _rows(full)
+
+
 def test_hybrid_rrf_hand_computed(spark):
     # round 7: RRF fusion over a corpus small enough to rank by hand
     docs = spark.createDataFrame(

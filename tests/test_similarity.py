@@ -4,6 +4,7 @@ geometry, and LSH recall measured against brute force on fixtures."""
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -283,24 +284,9 @@ def test_bucketed_ivf_opens_its_recorded_layout_in_a_fresh_catalog(
     assert _sorted_rows(joined, *cols) == _sorted_rows(self_join(plain), *cols)
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs `fn` runs, counted through a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    tag = f"ivf-{uuid.uuid4().hex}"
-    sc.setJobGroup(tag, tag)
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(tag))
-
-
 @pytest.mark.parametrize("n_buckets", [None, 8])
 def test_a_warm_ivf_load_runs_at_most_one_job(
-    spark, sf_dir, tmp_path, n_buckets
+    spark, sf_dir, tmp_path, count_jobs, n_buckets
 ):
     """ivf_load reads the manifest once with an explicit schema and
     sorts the centroids on the driver; `assigned` opens with the
@@ -309,7 +295,7 @@ def test_a_warm_ivf_load_runs_at_most_one_job(
     emb = load(spark, sf_dir, "embeddings")
     SIM.ivf_index(emb, n_lists=4, index_path=path, n_buckets=n_buckets)
     SIM.ivf_load(spark, path)
-    assert _jobs(spark, lambda: SIM.ivf_load(spark, path)) <= 1
+    assert count_jobs(lambda: SIM.ivf_load(spark, path)) <= 1
 
 
 def test_an_ivf_build_that_fails_before_its_manifest_leaves_no_index(
@@ -347,6 +333,103 @@ def test_an_ivf_build_that_fails_before_its_manifest_leaves_no_index(
     assert not SIM.ivf_index_exists(spark, path)
     assert _sorted_rows(knn(path), *cols) == expected
     assert SIM.ivf_index_exists(spark, path)
+
+
+def test_an_ivf_rebuild_that_fails_before_its_manifest_leaves_no_index(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A rebuild over an existing index deletes the old manifest before
+    it rewrites `assigned`.  Failing before the new manifest leaves no
+    index, not the old centroids over new assignments, and the retried
+    ivf_knn equals a run with no fault."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    emb = load(spark, sf_dir, "embeddings")
+    queries = emb.where("vec_id < 5")
+    cols = ("query_id", "neighbor_id", "cosine", "rank")
+
+    def knn(path):
+        return SIM.ivf_knn(emb, queries, k=3, n_lists=4, index_path=path)
+
+    expected = _sorted_rows(knn(str(tmp_path / "no_fault")), *cols)
+    path = str(tmp_path / "fault")
+    SIM.ivf_index(emb.where("vec_id % 2 = 0"), n_lists=4, index_path=path)
+    SIM.ivf_load(spark, path)  # the old manifest, cached
+    write = DataFrameWriter.parquet
+
+    def failing(self, target, *args, **kw):
+        if target == path + "/centroids":
+            raise RuntimeError("injected fault before the manifest")
+        return write(self, target, *args, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(RuntimeError, match="injected fault"):
+        SIM.ivf_index(emb, n_lists=4, index_path=path)
+    monkeypatch.setattr(DataFrameWriter, "parquet", write)
+    assert not SIM.ivf_index_exists(spark, path)
+    with pytest.raises(FileNotFoundError):
+        SIM.ivf_load(spark, path)
+    assert _sorted_rows(knn(path), *cols) == expected
+
+
+def _one_query(spark, emb, vec_id=7):
+    row = emb.where(F.col("vec_id") == vec_id).first()
+    return spark.createDataFrame(
+        [(row.vec_id, list(row.embedding))], "vec_id long, embedding array<float>"
+    )
+
+
+@pytest.mark.parametrize("n_buckets", [None, 8])
+def test_a_warm_ivf_request_runs_at_most_four_jobs(
+    spark, sf_dir, tmp_path, count_jobs, n_buckets
+):
+    """ivf_load on an unchanged manifest runs no job, and ivf_probe on a
+    one-row query frame ranks the centroids on the driver."""
+    path = str(tmp_path / "ivf")
+    emb = load(spark, sf_dir, "embeddings")
+    SIM.ivf_index(emb, n_lists=4, index_path=path, n_buckets=n_buckets)
+    q = _one_query(spark, emb)
+
+    def request():
+        assigned, centroids = SIM.ivf_load(spark, path)
+        return SIM.ivf_probe(assigned, centroids, q, k=5, n_probe=2).collect()
+
+    request()
+    assert count_jobs(lambda: SIM.ivf_load(spark, path)) == 0
+    assert count_jobs(request) <= 4
+
+
+@pytest.mark.parametrize("n_buckets", [None, 8])
+def test_ivf_probe_prunes_lists_at_plan_time(spark, sf_dir, tmp_path, n_buckets):
+    """The probed lists are literals in the plan: the `assigned` scan
+    prunes partitions or buckets to them, and the rows equal exact
+    cosine search restricted to those lists."""
+    path = str(tmp_path / "ivf")
+    emb = load(spark, sf_dir, "embeddings")
+    assigned, centroids = SIM.ivf_index(
+        emb, n_lists=4, index_path=path, n_buckets=n_buckets
+    )
+    q = _one_query(spark, emb)
+    probe = SIM.ivf_probe(assigned, centroids, q, k=5, n_probe=2)
+    plan = probe._jdf.queryExecution().executedPlan().toString()
+    scan = next(ln for ln in plan.splitlines() if "FileScan parquet" in ln)
+    if n_buckets is None:
+        assert re.search(r"PartitionFilters: \[list_id#\d+ IN \(", scan), scan
+    else:
+        assert "SelectedBucketsCount: 2 out of 8" in scan, scan
+    # the two lists nearest the query, by the assignment metric
+    qv = q.first().embedding
+    score = [
+        2.0 * sum(a * b for a, b in zip(qv, c)) - sum(b * b for b in c)
+        for c in centroids
+    ]
+    lists = sorted(range(4), key=lambda i: (-score[i], i))[:2]
+    exact = SIM.knn_bruteforce(
+        assigned.where(F.col("list_id").isin(*lists)), q, k=5
+    )
+    assert [r.neighbor_id for r in probe.collect()] == [
+        r.neighbor_id for r in exact.collect()
+    ]
 
 
 def test_lsh_n_planes_derivation():
