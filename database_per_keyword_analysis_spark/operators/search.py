@@ -15,13 +15,13 @@ dialect-portable.
 
 Scale shape (100 TB):
 
-* bm25_search — one tokenize pass; doc lengths from a per-doc count
-  (map-side combine); the query-term postings table is filtered BEFORE
-  its groupBy, so the shuffled tf table holds only docs containing a
-  query term, and joins its doc lengths; per-term document frequencies
-  are a count window over those rows; corpus stats (N, avgdl) attach
-  as a scalar subquery.  The only full-corpus shuffle is the
-  doc-length aggregate.
+* bm25_search — each doc's length is the size of its token array,
+  taken before the explode; the query-term postings are filtered
+  BEFORE their groupBy, so the shuffled tf table holds only docs
+  containing a query term, and each row carries its doc's length;
+  per-term document frequencies are a count window over those rows;
+  corpus stats (N, avgdl) come from one global aggregate over the
+  array sizes and enter as literals.  No full-corpus shuffle, no join.
 * vocab_coverage — distributed token count, then TakeOrdered limits the
   ranked vocabulary to top_n rows before the cumulative-sum window, so
   the single-partition prefix sum only ever sees top_n rows (bounded by
@@ -44,12 +44,27 @@ postings alone with the manifest's values, read once per commit
 (scale.read_manifest); an index whose manifest lacks this `format`
 predates `dl` on postings and raises ValueError.  Ids are BIGINT and
 unique per document.
+
+A probe takes one of two paths, picked from the postings' file
+listing before any postings are read.  Postings on the local
+filesystem totalling at most DRIVER_PROBE_MAX_BYTES are scored on the
+driver from the files (pyarrow, token filter pushed into the scan) in
+_bm25_score's exact arithmetic, into a local frame: no Spark job.  At
+that size a probe is a few thousand postings rows, and planning and
+scheduling Spark jobs cost far more CPU than scoring them (the gate
+is the measured crossover, SCALE.md).  Larger or non-local postings
+take the Spark plan, which stays the path that scales.
 """
 
 from __future__ import annotations
 
+import os
+from collections import Counter
+from decimal import ROUND_HALF_UP, Context, Decimal
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 # Default query over the fixture vocabulary; any term list works.
@@ -90,32 +105,38 @@ def bm25_search(
     in DECIMAL so the per-doc sum is independent of partial-aggregation
     order (same convention as knn_bruteforce's dot product).
     """
-    toks = _tokens(docs, text_col, id_col)
-    dl = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl"))
-    post = (
-        toks.where(F.col("token").isin(*query_terms))
-        .groupBy(id_col, "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .join(dl, id_col)
-    )
+    dl = _doc_words(docs, text_col, id_col).select(F.size("_w").alias("dl"))
     s = _corpus_stats(dl).select(F.struct("n_docs", "avgdl")).scalar()
+    post = _term_freqs(docs, text_col, id_col, query_terms)
     return _bm25_score(post, s["n_docs"], s["avgdl"], id_col, k1, b, top_k)
 
 
-def _term_freqs(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, token, tf, dl) over every token of every doc.  dl, the doc's
-    token count, is the size of its token array taken before the
-    explode, so it rides the tf aggregate with no second shuffle."""
-    return (
-        docs.where(F.col(text_col).isNotNull())
-        .select(id_col, _words(text_col).alias("_w"))
-        .select(
-            id_col,
-            F.size("_w").cast("long").alias("dl"),
-            F.explode("_w").alias("token"),
-        )
-        .groupBy(id_col, "token")
-        .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
+def _doc_words(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, _w): each non-NULL doc's token array."""
+    return docs.where(F.col(text_col).isNotNull()).select(
+        id_col, _words(text_col).alias("_w")
+    )
+
+
+def _term_freqs(
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    query_terms: tuple[str, ...] | None = None,
+) -> DataFrame:
+    """(id, token, tf, dl) over every token of every doc, or only over
+    `query_terms`, filtered before the aggregate.  dl, the doc's token
+    count, is the size of its token array taken before the explode, so
+    it rides the tf aggregate with no second shuffle."""
+    toks = _doc_words(docs, text_col, id_col).select(
+        id_col,
+        F.size("_w").cast("long").alias("dl"),
+        F.explode("_w").alias("token"),
+    )
+    if query_terms is not None:
+        toks = toks.where(F.col("token").isin(*query_terms))
+    return toks.groupBy(id_col, "token").agg(
+        F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl")
     )
 
 
@@ -129,8 +150,8 @@ def _corpus_stats(dl: DataFrame) -> DataFrame:
 
 def _bm25_score(
     post: DataFrame,
-    n_docs: Column,
-    avgdl: Column,
+    n_docs: float,
+    avgdl: float,
     id_col: str,
     k1: float,
     b: float,
@@ -139,10 +160,10 @@ def _bm25_score(
     """Scoring dataflow shared by the in-plan form (bm25_search) and
     the persisted-index probe (bm25_probe): `post` = (id, token, tf, dl)
     rows already filtered to the query terms, and the corpus stats as
-    scalar columns — a subquery over the in-plan dl, or the manifest's
-    literals.  (id, token) is unique, so df(t) is a count window over
-    `post`: no aggregate joined back, and no Exchange when the rows
-    arrive bucketed by token."""
+    literals — bm25_search's aggregate, or the manifest's values.
+    (id, token) is unique, so df(t) is a count window over `post`: no
+    aggregate joined back, and no Exchange when the rows arrive
+    bucketed by token.  _driver_probe repeats this arithmetic."""
     df = F.count(F.lit(1)).over(Window.partitionBy("token"))
     idf = F.log(
         F.lit(1.0) + (n_docs - F.col("df") + 0.5) / (F.col("df") + 0.5)
@@ -277,6 +298,13 @@ def build_postings_index(
     )
 
 
+# A probe scores on the driver when its postings are local and their
+# data files total at most this many bytes.  The driver path cost less
+# CPU than the Spark plan up to about 45-50 MB of postings (SCALE.md);
+# the gate sits below that.  Larger or remote postings take the plan.
+DRIVER_PROBE_MAX_BYTES = 32 << 20
+
+
 def bm25_probe(
     spark,
     index_path: str,
@@ -286,21 +314,125 @@ def bm25_probe(
     b: float = B,
     top_k: int = 15,
 ) -> DataFrame:
-    """Query a persisted index.  The token IN-filter pushes into the
-    postings scan (and prunes buckets), and the matching postings carry
-    their dl, so the probe scores them alone: it reads neither doclens
-    nor the corpus text.  The manifest, read once per commit, gives the
-    layout and the (n_docs, avgdl) literals, so a warm probe runs at
-    most 3 Spark jobs (a bucketed one 2: its token window needs no
-    Exchange).  Raises FileNotFoundError when no index is committed and
-    ValueError on an index of an older format.  Result-identical to
-    bm25_search over the same corpus (parity pytest-asserted)."""
+    """Query a persisted index.  The manifest, read once per commit,
+    gives the layout and the (n_docs, avgdl) values, and the matching
+    postings carry their dl, so the probe scores them alone: it reads
+    neither doclens nor the corpus text.  Local postings of at most
+    DRIVER_PROBE_MAX_BYTES are scored on the driver (_driver_probe), so
+    a warm probe runs no Spark job; others run a Spark plan whose token
+    IN-filter pushes into the postings scan (and prunes buckets), at
+    most 3 jobs warm (a bucketed one 2: its token window needs no
+    Exchange).  Both paths return the same rows and schema.  Raises
+    FileNotFoundError when no index is committed and ValueError on an
+    index of an older format.  Result-identical to bm25_search over the
+    same corpus (parity pytest-asserted)."""
     m = _read_manifest(spark, index_path)
+    local = _local_postings(spark, index_path)
+    if local is not None and local[1] <= DRIVER_PROBE_MAX_BYTES:
+        return _driver_probe(
+            spark, local[0], m, query_terms, id_col, k1, b, top_k
+        )
     post = _open_postings(spark, index_path, id_col, m["n_buckets"]).where(
         F.col("token").isin(*query_terms)
     )
-    n_docs, avgdl = F.lit(m["n_docs"]), F.lit(m["avgdl"])
-    return _bm25_score(post, n_docs, avgdl, id_col, k1, b, top_k)
+    return _bm25_score(post, m["n_docs"], m["avgdl"], id_col, k1, b, top_k)
+
+
+def _local_postings(spark, index_path: str):
+    """(data files, their total bytes) of the postings when Hadoop
+    resolves `index_path` to the local filesystem, else None.  Names
+    that Spark's reader skips (`_SUCCESS`, `_temporary/`, `.crc`) are
+    skipped here too."""
+    from pyarrow import fs
+
+    from .scale import _hadoop_path
+
+    p, hfs = _hadoop_path(spark, f"{index_path}/postings")
+    if hfs.getScheme() != "file":
+        return None
+    root = hfs.makeQualified(p).toUri().getPath()
+    found = fs.LocalFileSystem().get_file_info(
+        fs.FileSelector(root, recursive=True)
+    )
+    files = [
+        f for f in found
+        if f.type == fs.FileType.File
+        and not any(
+            part.startswith(("_", "."))
+            for part in os.path.relpath(f.path, root).split(os.sep)
+        )
+    ]
+    return [f.path for f in files], sum(f.size for f in files)
+
+
+def _driver_probe(
+    spark, files, m, query_terms, id_col, k1, b, top_k
+) -> DataFrame:
+    """_bm25_score's result computed in this process, bit for bit.  The
+    arithmetic follows the JVM's: idf takes StrictMath.log (Spark's
+    `log`, one call per query term), each contribution is the same
+    double expression in the same order, then cast to decimal(38,18)
+    HALF_UP from its shortest repr, summed exactly per doc, cast to
+    double and rounded to 6 places HALF_UP (Spark's `round`, again from
+    the repr).  The JVM's casts read Double.toString, which before JDK
+    19 can print more digits than the shortest repr on rare values;
+    none of 600,000 random doubles in [0.001, 100] did on JDK 17."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    schema = pa.schema(
+        [(id_col, pa.int64()), ("token", pa.string()),
+         ("tf", pa.int64()), ("dl", pa.int64())]
+    )
+    post = ds.dataset(files, schema=schema, format="parquet").to_table(
+        filter=ds.field("token").isin(sorted(set(query_terms)))
+    )
+    tokens = post.column("token").to_pylist()
+    log = spark._jvm.java.lang.StrictMath.log
+    idf = {
+        t: log(1.0 + (m["n_docs"] - df + 0.5) / (df + 0.5))
+        for t, df in Counter(tokens).items()
+    }
+    tf = post.column("tf").to_numpy().astype(float)
+    dl = post.column("dl").to_numpy().astype(float)
+    contrib = (
+        np.array([idf[t] for t in tokens], dtype=float)
+        * (tf * (k1 + 1))
+        / (tf + k1 * (1 - b + b * dl / m["avgdl"]))
+    )
+    ctx = Context(prec=38, rounding=ROUND_HALF_UP)
+    e18, e6 = Decimal("1e-18"), Decimal("1e-6")
+    sums: dict[int, list] = {}
+    for doc, c in zip(post.column(id_col).to_pylist(), contrib.tolist()):
+        term = ctx.quantize(Decimal(repr(c)), e18)
+        acc = sums.setdefault(doc, [0, Decimal(0)])
+        acc[0] += 1
+        acc[1] = ctx.add(acc[1], term)
+    rows = sorted(
+        (
+            (doc, n_terms, float(ctx.quantize(Decimal(repr(float(s))), e6)))
+            for doc, (n_terms, s) in sums.items()
+        ),
+        key=lambda r: (-r[2], r[0]),
+    )[:top_k]
+    out = pa.table(
+        [
+            pa.array([r[0] for r in rows], pa.int64()),
+            pa.array([r[1] for r in rows], pa.int64()),
+            pa.array([r[2] for r in rows], pa.float64()),
+        ],
+        names=[id_col, "n_terms", "score"],
+    )
+    # the Spark path's schema, nullability included
+    result_schema = StructType(
+        [
+            StructField(id_col, LongType()),
+            StructField("n_terms", LongType(), False),
+            StructField("score", DoubleType()),
+        ]
+    )
+    return spark.createDataFrame(out, result_schema)
 
 
 def vocab_coverage(

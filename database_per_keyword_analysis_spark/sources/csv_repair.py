@@ -107,23 +107,3 @@ def read_repaired_posts_csv(
         .where(F.col("full_date").isNotNull())
     )
 
-
-def read_clean_csv(
-    spark: SparkSession, path: str, schema: T.StructType, **options: str
-) -> DataFrame:
-    """Standard CSV path for well-formed files (quoted embedded real
-    newlines included): explicit schema, DROPMALFORMED, multiLine.
-
-    NOTE multiLine=true makes gzip'd/huge single files non-splittable —
-    at scale prefer the repaired-lines path or pre-split inputs.
-    """
-    opts = {
-        "header": "true",
-        "quote": '"',
-        "escape": '"',
-        "multiLine": "true",
-        "mode": "DROPMALFORMED",
-        "encoding": "UTF-8",
-        **options,
-    }
-    return spark.read.options(**opts).schema(schema).csv(path)

@@ -7,6 +7,8 @@ import datetime as dt
 import math
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 
 from database_per_keyword_analysis_spark.operators import events as E
@@ -326,12 +328,15 @@ def test_update_rejects_bucketed_index(spark, tmp_path):
     ) == _rows(built)
 
 
-def test_bucketed_probe_reads_its_layout_from_the_manifest(spark, tmp_path):
+def test_bucketed_probe_reads_its_layout_from_the_manifest(
+    spark, tmp_path, monkeypatch
+):
     """The manifest records n_buckets, so a session whose catalog never
     saw the build probes the bucketed layout with no layout argument
     and returns bm25_search's rows."""
     from database_per_keyword_analysis_spark.operators import scale as SC
 
+    monkeypatch.setattr(SRCH, "DRIVER_PROBE_MAX_BYTES", 0)  # the Spark plan
     docs = _index_docs(spark)
     path = str(tmp_path / "idx")
     SRCH.build_postings_index(docs, path, n_buckets=8)
@@ -466,11 +471,12 @@ def test_a_rebuild_that_fails_before_its_manifest_leaves_no_index(
 
 @pytest.mark.parametrize("n_buckets", [None, 8])
 def test_a_warm_bm25_probe_runs_at_most_three_jobs(
-    spark, tmp_path, count_jobs, n_buckets
+    spark, tmp_path, count_jobs, monkeypatch, n_buckets
 ):
     """The manifest is read once per commit and the postings carry dl,
     so a warm probe runs only its own stages: no manifest read, no
     doclens join, no idf aggregate."""
+    monkeypatch.setattr(SRCH, "DRIVER_PROBE_MAX_BYTES", 0)  # the Spark plan
     docs = _index_docs(spark)
     path = str(tmp_path / "idx")
     SRCH.build_postings_index(docs, path, n_buckets=n_buckets)
@@ -498,9 +504,12 @@ def test_a_probe_after_index_batch_sees_the_new_commit(spark, tmp_path):
     assert _rows(_probe(spark, path)) == _rows(full)
 
 
-def test_a_rebuild_in_another_layout_opens_that_layout(spark, tmp_path):
+def test_a_rebuild_in_another_layout_opens_that_layout(
+    spark, tmp_path, monkeypatch
+):
     """A plain index probed (its manifest cached), then rebuilt bucketed
     at the same path: the next probe opens the bucketed layout."""
+    monkeypatch.setattr(SRCH, "DRIVER_PROBE_MAX_BYTES", 0)  # the Spark plan
     docs = _index_docs(spark)
     path = str(tmp_path / "idx")
     SRCH.build_postings_index(docs.where("doc_id < 4"), path)
@@ -512,6 +521,116 @@ def test_a_rebuild_in_another_layout_opens_that_layout(spark, tmp_path):
     assert "SelectedBucketsCount" in plan, plan[:2000]
     full = SRCH.bm25_search(docs, query_terms=("hash", "join"), top_k=10)
     assert _rows(probe) == _rows(full)
+
+
+@pytest.mark.parametrize("n_buckets", [None, 8])
+def test_a_warm_driver_path_probe_runs_no_job(
+    spark, tmp_path, count_jobs, n_buckets
+):
+    """Small local postings are scored on the driver into a local
+    frame: a warm probe, collected, runs no Spark job."""
+    docs = _index_docs(spark)
+    path = str(tmp_path / "idx")
+    SRCH.build_postings_index(docs, path, n_buckets=n_buckets)
+    _probe(spark, path).collect()
+    assert count_jobs(lambda: _probe(spark, path).collect()) == 0
+
+
+def test_the_driver_path_raises_what_the_spark_path_raises(
+    spark, tmp_path, monkeypatch
+):
+    """The manifest is read before a path is picked, so a missing index
+    and one of the older format raise as they do on the Spark path."""
+    monkeypatch.setattr(SRCH, "DRIVER_PROBE_MAX_BYTES", 1 << 40)
+    with pytest.raises(FileNotFoundError):
+        _probe(spark, str(tmp_path / "none"))
+    docs = _index_docs(spark)
+    path = str(tmp_path / "old")
+    SRCH.build_postings_index(docs, path)
+    spark.createDataFrame(
+        [(8.0, 3.0, None)], "n_docs DOUBLE, avgdl DOUBLE, n_buckets INT"
+    ).write.mode("overwrite").parquet(f"{path}/stats")
+    with pytest.raises(ValueError, match="older format"):
+        _probe(spark, path)
+
+
+def test_postings_off_the_local_filesystem_take_the_spark_plan(
+    spark, tmp_path, monkeypatch
+):
+    """The gate asks Hadoop which filesystem holds the postings: on any
+    but the local one the probe runs the Spark plan, however small."""
+    from database_per_keyword_analysis_spark.operators import scale as SC
+
+    class Remote:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def getScheme(self):
+            return "hdfs"
+
+    local = SC._hadoop_path
+
+    def remote(spark, path):
+        p, fs = local(spark, path)
+        return p, Remote(fs)
+
+    docs = _index_docs(spark)
+    path = str(tmp_path / "idx")
+    SRCH.build_postings_index(docs, path)
+    monkeypatch.setattr(SC, "_hadoop_path", remote)
+    probe = _probe(spark, path)
+    plan = probe._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan" in plan and "LocalTableScan" not in plan, plan
+    full = SRCH.bm25_search(docs, query_terms=("hash", "join"), top_k=10)
+    assert probe.collect() == full.collect()
+
+
+_WORDS = st.lists(st.sampled_from("abcde"), min_size=1, max_size=6)
+
+
+@pytest.mark.parametrize("layout", ["plain", "bucketed", "index_batch"])
+@settings(max_examples=6, deadline=None)
+@given(
+    texts=st.lists(_WORDS, min_size=1, max_size=8),
+    terms=st.lists(st.sampled_from(["a", "b", "c", "zz"]), min_size=1,
+                   max_size=4),
+    top_k=st.sampled_from([1, 3, 5, 15]),
+)
+def test_the_driver_path_equals_the_spark_path(
+    spark, tmp_path_factory, layout, texts, terms, top_k
+):
+    """Every doc has a twin under another id, so each score appears at
+    least twice and an odd top_k cuts through a tie.  Query terms may
+    repeat or be absent ("zz"); a query of absent terms alone gives an
+    empty frame.  Both paths return the same rows in the same order
+    with the same schema."""
+    from database_per_keyword_analysis_spark.streaming import ingest as ING
+
+    n = len(texts)
+    docs = spark.createDataFrame(
+        [Row(doc_id=i, text=" ".join(w)) for i, w in enumerate(texts)]
+        + [Row(doc_id=100 + i, text=" ".join(w)) for i, w in enumerate(texts)]
+    )
+    path = str(tmp_path_factory.mktemp("idx"))
+    if layout == "index_batch":
+        ING.index_batch(docs.where(f"doc_id < {n}"), 0, path)
+        ING.index_batch(docs.where(f"doc_id >= {n}"), 1, path)
+    else:
+        SRCH.build_postings_index(
+            docs, path, n_buckets=8 if layout == "bucketed" else None
+        )
+    for query in (tuple(terms), ("zz",)):
+        driver = SRCH.bm25_probe(spark, path, query, top_k=top_k)
+        plan = driver._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, plan
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(SRCH, "DRIVER_PROBE_MAX_BYTES", 0)
+            plan_rows = SRCH.bm25_probe(spark, path, query, top_k=top_k)
+            assert driver.schema == plan_rows.schema
+            assert driver.collect() == plan_rows.collect(), query
 
 
 def test_hybrid_rrf_hand_computed(spark):
