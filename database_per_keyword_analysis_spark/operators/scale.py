@@ -22,6 +22,8 @@ avoids it).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -267,6 +269,53 @@ def drop_manifest(spark, path: str) -> None:
     _MANIFESTS.pop(path, None)
     p, fs = _hadoop_path(spark, path)
     fs.delete(p, True)
+
+
+# A probe of a persisted index (search.bm25_probe, similarity.ivf_probe)
+# runs on the driver from the index files when they are local and the
+# data files it reads total at most this many bytes.  The BM25 driver
+# path cost less CPU than the Spark plan up to about 45-50 MB of
+# postings (SCALE.md); the gate sits below that.  Larger or remote
+# indexes take the Spark plan.
+DRIVER_PROBE_MAX_BYTES = 32 << 20
+
+
+def local_data_files(spark, path: str, subdirs: list[str] | None = None):
+    """(root, data files, their total bytes) under `path`, or under
+    those of its `subdirs` that exist, when Hadoop resolves `path` to
+    the local filesystem; None otherwise.  `root` is `path` as a local
+    directory.  Names that Spark's reader skips (`_SUCCESS`,
+    `_temporary/`, `.crc`) are skipped here too."""
+    from pyarrow import fs
+
+    p, hfs = _hadoop_path(spark, path)
+    if hfs.getScheme() != "file":
+        return None
+    root = hfs.makeQualified(p).toUri().getPath()
+    local = fs.LocalFileSystem()
+    found = (
+        local.get_file_info(fs.FileSelector(root, recursive=True))
+        if subdirs is None
+        else [
+            f
+            for sub in subdirs
+            for f in local.get_file_info(
+                fs.FileSelector(
+                    os.path.join(root, sub), recursive=True,
+                    allow_not_found=True,
+                )
+            )
+        ]
+    )
+    files = [
+        f for f in found
+        if f.type == fs.FileType.File
+        and not any(
+            part.startswith(("_", "."))
+            for part in os.path.relpath(f.path, root).split(os.sep)
+        )
+    ]
+    return root, [f.path for f in files], sum(f.size for f in files)
 
 
 ZORDER_BITS = 16

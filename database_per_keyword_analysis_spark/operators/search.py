@@ -47,9 +47,10 @@ unique per document.
 
 A probe takes one of two paths, picked from the postings' file
 listing before any postings are read.  Postings on the local
-filesystem totalling at most DRIVER_PROBE_MAX_BYTES are scored on the
-driver from the files (pyarrow, token filter pushed into the scan) in
-_bm25_score's exact arithmetic, into a local frame: no Spark job.  At
+filesystem totalling at most scale.DRIVER_PROBE_MAX_BYTES (the gate
+the IVF probe shares) are scored on the driver from the files
+(pyarrow, token filter pushed into the scan) in _bm25_score's exact
+arithmetic, into a local frame: no Spark job.  At
 that size a probe is a few thousand postings rows, and planning and
 scheduling Spark jobs cost far more CPU than scoring them (the gate
 is the measured crossover, SCALE.md).  Larger or non-local postings
@@ -58,7 +59,6 @@ take the Spark plan, which stays the path that scales.
 
 from __future__ import annotations
 
-import os
 from collections import Counter
 from decimal import ROUND_HALF_UP, Context, Decimal
 
@@ -298,13 +298,6 @@ def build_postings_index(
     )
 
 
-# A probe scores on the driver when its postings are local and their
-# data files total at most this many bytes.  The driver path cost less
-# CPU than the Spark plan up to about 45-50 MB of postings (SCALE.md);
-# the gate sits below that.  Larger or remote postings take the plan.
-DRIVER_PROBE_MAX_BYTES = 32 << 20
-
-
 def bm25_probe(
     spark,
     index_path: str,
@@ -318,51 +311,26 @@ def bm25_probe(
     gives the layout and the (n_docs, avgdl) values, and the matching
     postings carry their dl, so the probe scores them alone: it reads
     neither doclens nor the corpus text.  Local postings of at most
-    DRIVER_PROBE_MAX_BYTES are scored on the driver (_driver_probe), so
-    a warm probe runs no Spark job; others run a Spark plan whose token
-    IN-filter pushes into the postings scan (and prunes buckets), at
-    most 3 jobs warm (a bucketed one 2: its token window needs no
-    Exchange).  Both paths return the same rows and schema.  Raises
+    scale.DRIVER_PROBE_MAX_BYTES are scored on the driver
+    (_driver_probe), so a warm probe runs no Spark job; others run a
+    Spark plan whose token IN-filter pushes into the postings scan (and
+    prunes buckets), at most 3 jobs warm (a bucketed one 2: its token
+    window needs no Exchange).  Both paths return the same rows and schema.  Raises
     FileNotFoundError when no index is committed and ValueError on an
     index of an older format.  Result-identical to bm25_search over the
     same corpus (parity pytest-asserted)."""
+    from . import scale
+
     m = _read_manifest(spark, index_path)
-    local = _local_postings(spark, index_path)
-    if local is not None and local[1] <= DRIVER_PROBE_MAX_BYTES:
+    local = scale.local_data_files(spark, f"{index_path}/postings")
+    if local is not None and local[2] <= scale.DRIVER_PROBE_MAX_BYTES:
         return _driver_probe(
-            spark, local[0], m, query_terms, id_col, k1, b, top_k
+            spark, local[1], m, query_terms, id_col, k1, b, top_k
         )
     post = _open_postings(spark, index_path, id_col, m["n_buckets"]).where(
         F.col("token").isin(*query_terms)
     )
     return _bm25_score(post, m["n_docs"], m["avgdl"], id_col, k1, b, top_k)
-
-
-def _local_postings(spark, index_path: str):
-    """(data files, their total bytes) of the postings when Hadoop
-    resolves `index_path` to the local filesystem, else None.  Names
-    that Spark's reader skips (`_SUCCESS`, `_temporary/`, `.crc`) are
-    skipped here too."""
-    from pyarrow import fs
-
-    from .scale import _hadoop_path
-
-    p, hfs = _hadoop_path(spark, f"{index_path}/postings")
-    if hfs.getScheme() != "file":
-        return None
-    root = hfs.makeQualified(p).toUri().getPath()
-    found = fs.LocalFileSystem().get_file_info(
-        fs.FileSelector(root, recursive=True)
-    )
-    files = [
-        f for f in found
-        if f.type == fs.FileType.File
-        and not any(
-            part.startswith(("_", "."))
-            for part in os.path.relpath(f.path, root).split(os.sep)
-        )
-    ]
-    return [f.path for f in files], sum(f.size for f in files)
 
 
 def _driver_probe(
@@ -404,8 +372,13 @@ def _driver_probe(
     ctx = Context(prec=38, rounding=ROUND_HALF_UP)
     e18, e6 = Decimal("1e-18"), Decimal("1e-6")
     sums: dict[int, list] = {}
+    # a contribution depends on (token, tf, dl) alone, so values repeat
+    # across rows: each distinct one is quantized once
+    terms: dict[float, Decimal] = {}
     for doc, c in zip(post.column(id_col).to_pylist(), contrib.tolist()):
-        term = ctx.quantize(Decimal(repr(c)), e18)
+        term = terms.get(c)
+        if term is None:
+            term = terms[c] = ctx.quantize(Decimal(repr(c)), e18)
         acc = sums.setdefault(doc, [0, Decimal(0)])
         acc[0] += 1
         acc[1] = ctx.add(acc[1], term)

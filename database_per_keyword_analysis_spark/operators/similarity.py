@@ -20,6 +20,8 @@ turning it into an equi-join on bucket id.
 
 from __future__ import annotations
 
+import weakref
+
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints under future-annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -580,13 +582,26 @@ def ivf_add(
 def _read_manifest(spark, index_path: str):
     """(centroids in list_id order, n_buckets, assigned schema DDL) from
     the manifest, read once per commit (scale.read_manifest) and sorted
-    on the driver."""
+    on the driver.  FileNotFoundError when none is committed, ValueError
+    when it predates the recorded schema."""
     rows = read_manifest(spark, index_path + "/centroids", _MANIFEST)
     if rows is None:
         raise FileNotFoundError(f"no IVF index manifest under {index_path}")
+    if rows[0].schema is None:
+        raise ValueError(
+            f"{index_path}: IVF index of an older format (no recorded "
+            "schema); rebuild it"
+        )
     rows = sorted(rows, key=lambda r: r.list_id)
     centroids = [list(r.centroid) for r in rows]
     return centroids, rows[0].n_buckets, rows[0].schema
+
+
+# Each `assigned` frame ivf_load returned, weakly, with the index it
+# opened: (index_path, n_buckets).  ivf_probe reads the files of such a
+# frame on the driver; a frame derived from it is a new object, absent
+# here, and takes the Spark plan.
+_OPENED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def ivf_load(spark, index_path: str):
@@ -596,7 +611,10 @@ def ivf_load(spark, index_path: str):
     unchanged) and sorted on the driver, and `assigned` opens in the
     recorded layout and schema (a bucketed table is re-registered with
     one DDL in a session that has not seen it).  Never re-runs training
-    or the assignment UDF."""
+    or the assignment UDF.  Raises FileNotFoundError when no index is
+    committed and ValueError on a manifest of an older format.  The
+    returned `assigned`, passed to ivf_probe unmodified, lets a small
+    local index be probed on the driver from its files."""
     from .scale import read_bucketed_index
 
     centroids, n_buckets, schema = _read_manifest(spark, index_path)
@@ -606,6 +624,7 @@ def ivf_load(spark, index_path: str):
         assigned = read_bucketed_index(
             spark, index_path + "/assigned", ["list_id"], n_buckets, schema
         )
+    _OPENED[assigned] = (index_path, n_buckets)
     return assigned, centroids
 
 
@@ -645,9 +664,10 @@ def ivf_knn(
 
     With `index_path` set, a committed index there is REUSED in its
     recorded layout (train once, probe many — no k-means, no assignment
-    pass; the probe is a pruned parquet scan); absent one, the index is
-    built and persisted there, plain, for every later call.  Without a
-    path, build is inline (the labeled baseline form).
+    pass; the probe reads only the probed lists, on the driver when they
+    are small and local, see ivf_probe); absent one, the index is built
+    and persisted there, plain, for every later call.  Without a path,
+    build is inline (the labeled baseline form).
     """
     assigned, centroids = _load_or_build(
         vectors, index_path, n_lists, vec_col, id_col, seed
@@ -667,19 +687,36 @@ def ivf_probe(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Probe stage of IVF: search each query's n_probe nearest inverted
-    lists.  `queries` is request-sized — one row per request, ten in
-    the catalog, at most twenty in tests — and is fetched to the driver
-    once.  There the centroids are ranked per query by the assignment
-    metric (min ||q−c||² ⇔ max 2 q·c − ||c||², ties to the lower
-    list_id) in `_dot_dbl`'s double arithmetic, so `assigned` is read
-    with a literal `list_id IN (…)` that prunes partitions or buckets
-    at plan time.  The |Q|·n_probe (query, list) rows broadcast into an
-    equi-join on list_id, top-k per query takes one shuffle, and the
-    final ≤|Q|·k rows sort in one task.  A corpus-sized query set is
-    semantic_dedup's list_id self-join, not a probe."""
-    import math
+    lists.  Returns (query_id, neighbor_id, cosine, rank), the k nearest
+    other vectors per query by cosine (ties to the lower neighbor_id),
+    ordered by query_id and rank.  `queries` is request-sized — one row
+    per request, ten in the catalog, at most twenty in tests — and is
+    fetched to the driver once (a job unless it is a local frame).
+    There the centroids are ranked per query by the assignment metric
+    (min ||q−c||² ⇔ max 2 q·c − ||c||², ties to the lower list_id) in
+    `_dot_dbl`'s double arithmetic, which fixes the probed lists.
 
-    import pyarrow as pa
+    Two paths compute the same rows with the same schema:
+
+    * driver — when `assigned` is the unmodified frame ivf_load returned
+      (also through ivf_index or ivf_knn with `index_path`), the index
+      is on the local filesystem, and the files read total at most
+      scale.DRIVER_PROBE_MAX_BYTES: the probed lists' files (`list_id=`
+      directories, or the bucket files with `list_id IN` pushed down)
+      are read with pyarrow and scored in numpy in `_dot_dbl`'s order,
+      into a local frame.  A warm request then runs no Spark job past
+      the query fetch.  Candidates the numpy path does not model (null,
+      ragged or non-finite vectors, a zero norm) fall back to the plan,
+      so its errors and NULLs are the ones raised.
+    * Spark plan — otherwise, and the path that scales: `assigned` is
+      read with a literal `list_id IN (…)` that prunes partitions or
+      buckets at plan time, the |Q|·n_probe (query, list) rows broadcast
+      into an equi-join on list_id, top-k per query takes one shuffle,
+      and the final ≤|Q|·k rows sort in one task.
+
+    A corpus-sized query set is semantic_dedup's list_id self-join, not
+    a probe."""
+    import math
 
     cc = [_dot_py(c, c) for c in centroids]
     probes = []
@@ -691,6 +728,127 @@ def ivf_probe(
         )
         q_norm = math.sqrt(_dot_py(q, q))
         probes += [(r[id_col], i, q, q_norm) for i in ranked[:n_probe]]
+    lists = sorted({p[1] for p in probes})
+    id_type = queries.schema[id_col].dataType
+    local = _driver_probe(assigned, probes, lists, id_type, k, vec_col, id_col)
+    if local is not None:
+        return local
+    return _spark_probe(assigned, probes, lists, id_type, k, vec_col, id_col)
+
+
+def _driver_probe(assigned, probes, lists, id_type, k, vec_col, id_col):
+    """_spark_probe's result computed in this process from the index
+    files as committed now, or None where the plan must run
+    (ivf_probe).  Both dot products sum left to right from 0.0 over
+    columns (`acc = acc + E[:, j] * q[j]`), as `_dot_dbl`'s aggregate
+    does, then sqrt and the same division: the cosines are
+    bit-identical.  No `np.dot`: it sums in another order."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import (
+        DoubleType,
+        IntegerType,
+        StructField,
+        StructType,
+    )
+
+    from . import scale
+
+    opened = _OPENED.get(assigned)
+    nid_field = assigned.schema[id_col]
+    d = len(probes[0][2]) if probes else 0
+    if (
+        opened is None
+        or nid_field.dataType != id_type
+        or any(len(p[2]) != d for p in probes)
+    ):
+        return None
+    index_path, n_buckets = opened
+    spark = assigned.sparkSession
+    subdirs = None if n_buckets else [f"list_id={i}" for i in lists]
+    local = scale.local_data_files(spark, f"{index_path}/assigned", subdirs)
+    if local is None or local[2] > scale.DRIVER_PROBE_MAX_BYTES:
+        return None
+    root, files, _ = local
+    rows = []
+    if files:
+        hive = ds.partitioning(pa.schema([("list_id", pa.int32())]), flavor="hive")
+        cand = ds.dataset(
+            files, format="parquet", partition_base_dir=root,
+            partitioning=None if n_buckets else hive,
+        ).to_table(
+            columns=[id_col, vec_col, "list_id"],
+            filter=ds.field("list_id").isin(lists),
+        )
+        emb = cand.column(vec_col).combine_chunks()
+        flat = emb.flatten()
+        if (
+            cand.column(id_col).null_count or emb.null_count or flat.null_count
+            or len(cand)
+            and pc.min_max(pc.list_value_length(emb)).as_py()
+            != {"min": d, "max": d}
+        ):
+            return None
+        E = flat.to_numpy(zero_copy_only=False).astype(np.float64)
+        E = E.reshape(len(cand), d)
+        ids = cand.column(id_col).to_numpy(zero_copy_only=False)
+        list_of = cand.column("list_id").to_numpy()
+        c_norm = np.zeros(len(E))
+        for j in range(d):
+            c_norm = c_norm + E[:, j] * E[:, j]
+        c_norm = np.sqrt(c_norm)
+        found: dict = {}
+        for query_id, i, q, q_norm in probes:
+            if query_id is None:  # `query_id != neighbor_id` is NULL: no row
+                continue
+            sel = np.flatnonzero((list_of == i) & (ids != query_id))
+            dot = np.zeros(len(sel))
+            for j in range(d):
+                dot = dot + E[sel, j] * q[j]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cosine = dot / (q_norm * c_norm[sel])
+            if not np.isfinite(cosine).all():
+                return None
+            found.setdefault(query_id, []).extend(
+                zip(cosine.tolist(), ids[sel].tolist())
+            )
+        rows = [
+            (query_id, neighbor_id, cosine, rank)
+            for query_id in sorted(found)
+            for rank, (cosine, neighbor_id) in enumerate(
+                sorted(found[query_id], key=lambda r: (-r[0], r[1]))[: max(k, 0)],
+                start=1,
+            )
+        ]
+    # the Spark plan's schema, nullability included
+    schema = StructType(
+        [
+            StructField("query_id", id_type),
+            StructField("neighbor_id", nid_field.dataType, nid_field.nullable),
+            StructField("cosine", DoubleType()),
+            StructField("rank", IntegerType(), False),
+        ]
+    )
+    cols = list(zip(*rows)) if rows else ([],) * 4
+    return spark.createDataFrame(
+        pa.table(
+            [
+                pa.array(c, to_arrow_type(f.dataType))
+                for c, f in zip(cols, schema.fields)
+            ],
+            names=schema.names,
+        ),
+        schema,
+    )
+
+
+def _spark_probe(assigned, probes, lists, id_type, k, vec_col, id_col):
+    """ivf_probe's Spark plan over the driver-ranked `probes`."""
+    import pyarrow as pa
+
     query_id, list_id, q_emb, q_norm = zip(*probes) if probes else ([],) * 4
     # from Arrow, a LocalRelation: no Python RDD, no runtime pruning subquery
     qc = assigned.sparkSession.createDataFrame(
@@ -702,8 +860,7 @@ def ivf_probe(
                 "q_norm": pa.array(q_norm, pa.float64()),
             }
         )
-    ).withColumn("query_id", F.col("query_id").cast(queries.schema[id_col].dataType))
-    lists = sorted(set(list_id))
+    ).withColumn("query_id", F.col("query_id").cast(id_type))
     cand = assigned.where(F.col("list_id").isin(*lists)).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_emb"), "list_id"
     )

@@ -11,9 +11,11 @@ PARALLEL (one executor task per window) and each task streams rows via
 fetchsize instead of materializing a month in the driver.  Projection /
 predicates are pushed by Catalyst through the dbtable subquery.
 
-No database exists in this container, so the module is exercised by
-unit tests over the generated predicates/options and by substituting a
-parquet-backed DataFrame for the reader output in pipeline tests.
+Tests read through `read_partitioned` from an in-memory embedded Derby
+table (Derby ships in pyspark's jars) as the local JDBC source: one
+partition per month, rows in range, NULL text dropped by the pushed
+subquery.  Pipeline tests substitute a parquet-backed DataFrame for
+the reader output.
 """
 
 from __future__ import annotations

@@ -34,3 +34,28 @@ def count_jobs(spark):
         return len(sc.statusTracker().getJobIdsForGroup(tag))
 
     return count
+
+
+@pytest.fixture
+def hdfs_scheme(monkeypatch):
+    """Make the Hadoop FileSystem of every index path report scheme
+    `hdfs`, so size-gated driver paths see non-local storage."""
+    from database_per_keyword_analysis_spark.operators import scale as SC
+
+    class Remote:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def getScheme(self):
+            return "hdfs"
+
+    local = SC._hadoop_path
+
+    def remote(spark, path):
+        p, fs = local(spark, path)
+        return p, Remote(fs)
+
+    monkeypatch.setattr(SC, "_hadoop_path", remote)

@@ -8,6 +8,7 @@ becomes a shuffle join, a projection that drags every column through)."""
 from __future__ import annotations
 
 from database_per_keyword_analysis_spark import catalog
+from database_per_keyword_analysis_spark.operators import scale as SC
 from database_per_keyword_analysis_spark.operators import search as SRCH
 from database_per_keyword_analysis_spark.sources import load
 
@@ -274,7 +275,7 @@ def test_bm25_probe_pushes_token_filter_to_index_scan(
     """The probe's token IN-filter must reach the postings parquet scan
     (row-group pruning) — a post-scan filter would read the whole
     postings table per query."""
-    monkeypatch.setattr(SRCH, "DRIVER_PROBE_MAX_BYTES", 0)  # the Spark plan
+    monkeypatch.setattr(SC, "DRIVER_PROBE_MAX_BYTES", 0)  # the Spark plan
     plan = _plan(spark, sf_dir, "bm25_search_indexed")
     assert "PushedFilters: [In(token" in plan
 
@@ -283,7 +284,7 @@ def test_bm25_probe_reads_no_doclens(spark, sf_dir, monkeypatch):
     """The postings carry each doc's dl, so the probe scans no doclens,
     and over the bucketed postings the per-token df window has no
     Exchange between it and the bucketed scan."""
-    monkeypatch.setattr(SRCH, "DRIVER_PROBE_MAX_BYTES", 0)  # the Spark plan
+    monkeypatch.setattr(SC, "DRIVER_PROBE_MAX_BYTES", 0)  # the Spark plan
     lines = _plan(spark, sf_dir, "bm25_search_indexed").splitlines()
     assert not any("/doclens]" in ln for ln in lines), "\n".join(lines)
     win = next(i for i, ln in enumerate(lines) if "Window [" in ln)
@@ -835,7 +836,6 @@ def test_bloom_join_injects_runtime_filter(spark, sf_dir):
     FPs only add rows the join drops."""
     from pyspark.sql import functions as F
 
-    from database_per_keyword_analysis_spark.operators import scale as SC
     from database_per_keyword_analysis_spark.sources import load
 
     li = load(spark, sf_dir, "lineitem")
@@ -887,8 +887,6 @@ def test_run_with_confs_restores_even_on_error(spark):
     the build raises (an unrestored autoBroadcastJoinThreshold=-1
     would silently de-broadcast every later catalog join)."""
     import pytest
-
-    from database_per_keyword_analysis_spark.operators import scale as SC
 
     key = "spark.sql.autoBroadcastJoinThreshold"
     before = spark.conf.get(key)

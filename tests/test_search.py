@@ -12,6 +12,7 @@ from hypothesis import strategies as st
 from pyspark.sql import Row
 
 from database_per_keyword_analysis_spark.operators import events as E
+from database_per_keyword_analysis_spark.operators import scale as SC
 from database_per_keyword_analysis_spark.operators import search as SRCH
 
 
@@ -334,9 +335,7 @@ def test_bucketed_probe_reads_its_layout_from_the_manifest(
     """The manifest records n_buckets, so a session whose catalog never
     saw the build probes the bucketed layout with no layout argument
     and returns bm25_search's rows."""
-    from database_per_keyword_analysis_spark.operators import scale as SC
-
-    monkeypatch.setattr(SRCH, "DRIVER_PROBE_MAX_BYTES", 0)  # the Spark plan
+    monkeypatch.setattr(SC, "DRIVER_PROBE_MAX_BYTES", 0)  # the Spark plan
     docs = _index_docs(spark)
     path = str(tmp_path / "idx")
     SRCH.build_postings_index(docs, path, n_buckets=8)
@@ -476,7 +475,7 @@ def test_a_warm_bm25_probe_runs_at_most_three_jobs(
     """The manifest is read once per commit and the postings carry dl,
     so a warm probe runs only its own stages: no manifest read, no
     doclens join, no idf aggregate."""
-    monkeypatch.setattr(SRCH, "DRIVER_PROBE_MAX_BYTES", 0)  # the Spark plan
+    monkeypatch.setattr(SC, "DRIVER_PROBE_MAX_BYTES", 0)  # the Spark plan
     docs = _index_docs(spark)
     path = str(tmp_path / "idx")
     SRCH.build_postings_index(docs, path, n_buckets=n_buckets)
@@ -509,7 +508,7 @@ def test_a_rebuild_in_another_layout_opens_that_layout(
 ):
     """A plain index probed (its manifest cached), then rebuilt bucketed
     at the same path: the next probe opens the bucketed layout."""
-    monkeypatch.setattr(SRCH, "DRIVER_PROBE_MAX_BYTES", 0)  # the Spark plan
+    monkeypatch.setattr(SC, "DRIVER_PROBE_MAX_BYTES", 0)  # the Spark plan
     docs = _index_docs(spark)
     path = str(tmp_path / "idx")
     SRCH.build_postings_index(docs.where("doc_id < 4"), path)
@@ -541,7 +540,7 @@ def test_the_driver_path_raises_what_the_spark_path_raises(
 ):
     """The manifest is read before a path is picked, so a missing index
     and one of the older format raise as they do on the Spark path."""
-    monkeypatch.setattr(SRCH, "DRIVER_PROBE_MAX_BYTES", 1 << 40)
+    monkeypatch.setattr(SC, "DRIVER_PROBE_MAX_BYTES", 1 << 40)
     with pytest.raises(FileNotFoundError):
         _probe(spark, str(tmp_path / "none"))
     docs = _index_docs(spark)
@@ -555,32 +554,13 @@ def test_the_driver_path_raises_what_the_spark_path_raises(
 
 
 def test_postings_off_the_local_filesystem_take_the_spark_plan(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, hdfs_scheme
 ):
     """The gate asks Hadoop which filesystem holds the postings: on any
     but the local one the probe runs the Spark plan, however small."""
-    from database_per_keyword_analysis_spark.operators import scale as SC
-
-    class Remote:
-        def __init__(self, fs):
-            self._fs = fs
-
-        def __getattr__(self, name):
-            return getattr(self._fs, name)
-
-        def getScheme(self):
-            return "hdfs"
-
-    local = SC._hadoop_path
-
-    def remote(spark, path):
-        p, fs = local(spark, path)
-        return p, Remote(fs)
-
     docs = _index_docs(spark)
     path = str(tmp_path / "idx")
     SRCH.build_postings_index(docs, path)
-    monkeypatch.setattr(SC, "_hadoop_path", remote)
     probe = _probe(spark, path)
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "FileScan" in plan and "LocalTableScan" not in plan, plan
@@ -627,7 +607,7 @@ def test_the_driver_path_equals_the_spark_path(
         plan = driver._jdf.queryExecution().executedPlan().toString()
         assert "LocalTableScan" in plan, plan
         with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(SRCH, "DRIVER_PROBE_MAX_BYTES", 0)
+            mp.setattr(SC, "DRIVER_PROBE_MAX_BYTES", 0)
             plan_rows = SRCH.bm25_probe(spark, path, query, top_k=top_k)
             assert driver.schema == plan_rows.schema
             assert driver.collect() == plan_rows.collect(), query

@@ -7,8 +7,11 @@ import math
 import re
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from database_per_keyword_analysis_spark.operators import scale as SC
 from database_per_keyword_analysis_spark.operators import similarity as SIM
 from database_per_keyword_analysis_spark.sources import load
 
@@ -381,10 +384,11 @@ def _one_query(spark, emb, vec_id=7):
 
 @pytest.mark.parametrize("n_buckets", [None, 8])
 def test_a_warm_ivf_request_runs_at_most_four_jobs(
-    spark, sf_dir, tmp_path, count_jobs, n_buckets
+    spark, sf_dir, tmp_path, count_jobs, monkeypatch, n_buckets
 ):
     """ivf_load on an unchanged manifest runs no job, and ivf_probe on a
     one-row query frame ranks the centroids on the driver."""
+    monkeypatch.setattr(SC, "DRIVER_PROBE_MAX_BYTES", 0)  # the Spark plan
     path = str(tmp_path / "ivf")
     emb = load(spark, sf_dir, "embeddings")
     SIM.ivf_index(emb, n_lists=4, index_path=path, n_buckets=n_buckets)
@@ -400,10 +404,13 @@ def test_a_warm_ivf_request_runs_at_most_four_jobs(
 
 
 @pytest.mark.parametrize("n_buckets", [None, 8])
-def test_ivf_probe_prunes_lists_at_plan_time(spark, sf_dir, tmp_path, n_buckets):
+def test_ivf_probe_prunes_lists_at_plan_time(
+    spark, sf_dir, tmp_path, monkeypatch, n_buckets
+):
     """The probed lists are literals in the plan: the `assigned` scan
     prunes partitions or buckets to them, and the rows equal exact
     cosine search restricted to those lists."""
+    monkeypatch.setattr(SC, "DRIVER_PROBE_MAX_BYTES", 0)  # the Spark plan
     path = str(tmp_path / "ivf")
     emb = load(spark, sf_dir, "embeddings")
     assigned, centroids = SIM.ivf_index(
@@ -430,6 +437,153 @@ def test_ivf_probe_prunes_lists_at_plan_time(spark, sf_dir, tmp_path, n_buckets)
     assert [r.neighbor_id for r in probe.collect()] == [
         r.neighbor_id for r in exact.collect()
     ]
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("n_buckets", [None, 8])
+def test_a_warm_driver_path_ivf_request_runs_one_job_or_none(
+    spark, sf_dir, tmp_path, count_jobs, n_buckets
+):
+    """A small local index is probed on the driver from its files: the
+    only job of a warm request is the fetch of a list-built query
+    frame, and an Arrow-built (local) frame needs none."""
+    import pyarrow as pa
+
+    path = str(tmp_path / "ivf")
+    emb = load(spark, sf_dir, "embeddings")
+    SIM.ivf_index(emb, n_lists=4, index_path=path, n_buckets=n_buckets)
+    listed = _one_query(spark, emb)
+    row = listed.first()
+    arrow = spark.createDataFrame(
+        pa.table(
+            {
+                "vec_id": pa.array([row.vec_id], pa.int64()),
+                "embedding": pa.array([row.embedding], pa.list_(pa.float32())),
+            }
+        )
+    )
+
+    def request(q):
+        assigned, centroids = SIM.ivf_load(spark, path)
+        return SIM.ivf_probe(assigned, centroids, q, k=5, n_probe=2).collect()
+
+    assert request(listed) == request(arrow)
+    assert count_jobs(lambda: request(listed)) == 1
+    assert count_jobs(lambda: request(arrow)) == 0
+
+
+@pytest.mark.parametrize("gate", [0, 1 << 40])
+def test_the_ivf_driver_path_raises_what_the_spark_path_raises(
+    spark, tmp_path, monkeypatch, gate
+):
+    """A zero-norm vector in a probed list fails the cosine's division
+    on both paths, with Spark's error.  A missing manifest and one that
+    predates the recorded schema raise in ivf_load, before a path is
+    picked."""
+    from pyspark.errors import ArithmeticException
+
+    monkeypatch.setattr(SC, "DRIVER_PROBE_MAX_BYTES", gate)
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [0.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    )
+    path = str(tmp_path / "ivf")
+    SIM.ivf_index(emb, n_lists=2, index_path=path)
+    assigned, centroids = SIM.ivf_load(spark, path)
+    probe = SIM.ivf_probe(
+        assigned, centroids, emb.where("vec_id = 0"), k=3, n_probe=2
+    )
+    with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+        probe.collect()
+    with pytest.raises(FileNotFoundError):
+        SIM.ivf_load(spark, str(tmp_path / "none"))
+    spark.createDataFrame(
+        [(0, [1.0, 0.0])], "list_id INT, centroid ARRAY<DOUBLE>"
+    ).write.mode("overwrite").parquet(path + "/centroids")
+    with pytest.raises(ValueError, match="older format"):
+        SIM.ivf_load(spark, path)
+
+
+def test_a_derived_or_remote_assigned_takes_the_spark_plan(
+    spark, sf_dir, tmp_path, request
+):
+    """Only the unmodified frame ivf_load returned is probed from the
+    files.  A filtered or projected one, or one on a filesystem that is
+    not local, runs the Spark plan, with the same rows."""
+    path = str(tmp_path / "ivf")
+    emb = load(spark, sf_dir, "embeddings")
+    SIM.ivf_index(emb, n_lists=4, index_path=path)
+    q = _one_query(spark, emb)
+    assigned, centroids = SIM.ivf_load(spark, path)
+
+    def probe(a):
+        return SIM.ivf_probe(a, centroids, q, k=5, n_probe=2)
+
+    local = probe(assigned)
+    assert "FileScan" not in _plan(local), _plan(local)
+    for derived in (
+        assigned.where("vec_id >= 0"),
+        assigned.select("vec_id", "embedding", "list_id"),
+    ):
+        assert "FileScan" in _plan(probe(derived)), _plan(probe(derived))
+        assert probe(derived).collect() == local.collect()
+    request.getfixturevalue("hdfs_scheme")
+    remote = probe(SIM.ivf_load(spark, path)[0])
+    assert "FileScan" in _plan(remote), _plan(remote)
+    assert remote.collect() == local.collect()
+
+
+@pytest.mark.parametrize("layout", ["plain", "bucketed", "ivf_add"])
+@settings(max_examples=5, deadline=None)
+@given(
+    seed=st.integers(0, 2**32 - 1),
+    n=st.integers(2, 10),
+    n_queries=st.integers(1, 3),
+    k=st.sampled_from([1, 3, 50]),
+)
+def test_the_ivf_driver_path_equals_the_spark_path(
+    spark, tmp_path_factory, layout, seed, n, n_queries, k
+):
+    """Random 16-d float vectors, where a dot product summed in another
+    order differs in the last bits.  Every vector has a twin under
+    another id, so cosines tie and the cut breaks ties on neighbor_id.
+    The queries are index vectors, so their own ids sit in the lists
+    they probe and are dropped; k=50 exceeds the candidates.  Both
+    paths return the same rows in the same order with the same
+    schema."""
+    import numpy as np
+
+    vecs = np.random.default_rng(seed).standard_normal((n, 16), np.float32)
+    emb = spark.createDataFrame(
+        [
+            (base + i, [float(x) for x in v])
+            for base in (0, 100)
+            for i, v in enumerate(vecs)
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    path = str(tmp_path_factory.mktemp("ivf"))
+    if layout == "ivf_add":
+        SIM.ivf_index(emb.where("vec_id < 100"), n_lists=3, index_path=path)
+        SIM.ivf_add(emb.where("vec_id >= 100"), path)
+    else:
+        SIM.ivf_index(
+            emb, n_lists=3, index_path=path,
+            n_buckets=8 if layout == "bucketed" else None,
+        )
+    queries = emb.where(f"vec_id < {n_queries} OR vec_id = 100")
+    assigned, centroids = SIM.ivf_load(spark, path)
+    driver = SIM.ivf_probe(assigned, centroids, queries, k=k, n_probe=2)
+    assert "FileScan" not in _plan(driver), _plan(driver)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(SC, "DRIVER_PROBE_MAX_BYTES", 0)
+        plan_rows = SIM.ivf_probe(assigned, centroids, queries, k=k, n_probe=2)
+        assert "FileScan" in _plan(plan_rows), _plan(plan_rows)
+        assert driver.schema == plan_rows.schema
+        assert driver.collect() == plan_rows.collect()
 
 
 def test_lsh_n_planes_derivation():

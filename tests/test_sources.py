@@ -98,6 +98,42 @@ def test_jdbc_scan_pushdown_shape():
     assert opts["pushDownPredicate"] == "true"
 
 
+def test_read_partitioned_reads_each_month_in_its_own_partition(spark):
+    """Embedded Derby, shipped in pyspark's jars, as a local JDBC
+    source: one Spark partition per month predicate, the table's rows
+    in range, and a NULL text dropped by the scan's pushed filter."""
+    url = "jdbc:derby:memory:telegram_posts;create=true"
+    conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        stmt = conn.createStatement()
+        stmt.executeUpdate(
+            "CREATE TABLE telegram_channel_post (text VARCHAR(100), "
+            "full_date DATE, channel_username VARCHAR(50), views INT)"
+        )
+        stmt.executeUpdate(
+            "INSERT INTO telegram_channel_post VALUES "
+            "('last year', DATE('2023-12-31'), 'chan_a', 1), "
+            "('steel up', DATE('2024-01-01'), 'chan_a', 2), "
+            "('water down', DATE('2024-01-31'), 'chan_b', 3), "
+            "(NULL, DATE('2024-02-10'), 'chan_a', 4), "
+            "('leap day', DATE('2024-02-29'), 'chan_c', 5), "
+            "('march', DATE('2024-03-31'), 'chan_a', 6), "
+            "('april', DATE('2024-04-01'), 'chan_b', 7)"
+        )
+    finally:
+        conn.close()
+    scan = jdbc.telegram_posts_scan(url)
+    df = jdbc.read_partitioned(spark, scan, date(2024, 1, 1), date(2024, 4, 1))
+    assert df.rdd.getNumPartitions() == 3
+    assert "text IS NOT NULL" in df._jdf.queryExecution().executedPlan().toString()
+    assert sorted(tuple(r) for r in df.collect()) == [
+        ("leap day", date(2024, 2, 29), "chan_c", 5),
+        ("march", date(2024, 3, 31), "chan_a", 6),
+        ("steel up", date(2024, 1, 1), "chan_a", 2),
+        ("water down", date(2024, 1, 31), "chan_b", 3),
+    ]
+
+
 def test_entry2_csv_to_keyword_pipeline(spark, scratch):
     """Reference entry point 2 (offline pipeline, main.py:1085-1096):
     malformed CSV → repair → coerce → keyword pipeline, end to end."""
