@@ -6258,21 +6258,25 @@ def _upsert_cache_base(sf_dir: str) -> str:
     """Cache dir for stream_user_latest_upsert's source split + table,
     keyed on the events fixture's identity (abspath + size + mtime_ns)
     so a regenerated fixture at the same path can never serve a stale
-    committed table.  Extracted (r14 advice item 1) so the wrapper and
-    the cache-rebuild test derive the key from ONE formula and cannot
-    diverge."""
+    committed table.  The key also holds the cache's own root: the
+    streaming checkpoint records its source files by absolute path, so
+    a cache moved with a copied repo is rebuilt under a new key instead
+    of failing with "Wrong basePath".  Extracted (r14 advice item 1) so
+    the wrapper and the cache-rebuild test derive the key from ONE
+    formula and cannot diverge."""
     import hashlib
     import os
 
     ev = os.path.join(sf_dir, "events.parquet")
     st = os.stat(ev)
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{st.st_size}:{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    return os.path.join(
+    root = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".cache", "upsert", key,
+        ".cache", "upsert",
     )
+    key = hashlib.md5(
+        f"{os.path.abspath(sf_dir)}:{st.st_size}:{st.st_mtime_ns}:{root}".encode()
+    ).hexdigest()[:12]
+    return os.path.join(root, key)
 
 
 @register(

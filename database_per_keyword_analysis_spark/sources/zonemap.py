@@ -22,20 +22,47 @@ log-less snapshot diff:
   `orders_pruned_totals` (catalog.py) proves completeness, and
   tests/test_sources.py pins that fewer files are actually read.
 
+The zone map is read, not recomputed, on every request:
+
+* It records its table's schema: :func:`build_zone_map` stores it as
+  JSON in the metadata of the `file` column, which any parquet write
+  of the map persists and any read carries back.  :func:`pruned_scan`
+  and :func:`zone_map_append` read the table with that schema and run
+  no inference job.  A map without the metadata (written by older
+  code) keeps schema inference.
+* Its rows are cached on the driver when the frame passed in is a bare
+  parquet scan (``spark.read.parquet(<zone map dir>)``, whose analyzed
+  plan is a ``LogicalRelation``): one Arrow read per listing of the
+  frame's own files, then the overlap filter runs over a local
+  relation that Catalyst folds on the driver, with no job.  Any
+  derived frame (a union, a ``.where``, :func:`build_zone_map`'s own
+  output) is collected as it is.
+
 Derived from the reference's month-partitioned fetch (the only
-skipping it has, /root/reference/main.py:240-306), generalized to
-arbitrary clustered columns.  The driver-side file list collect is
-partition-list-bounded (one row per FILE, the repo's accepted bound),
-never data-bounded.
+skipping it has, main.py:240-306), generalized to arbitrary clustered
+columns.  The driver-side file list is partition-list-bounded (one row
+per FILE, the repo's accepted bound), never data-bounded.
 """
 
 from __future__ import annotations
 
+import json
 from typing import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# Metadata key of the zone map's `file` column: the indexed table's
+# schema as JSON, recorded by build_zone_map.
+SCHEMA_KEY = "table_schema"
+
+# One entry per zone-map directory read as a bare parquet scan: (the
+# frame's files with their modification times, its rows as an Arrow
+# table).  A frame lists its files once, when it is opened, so it keys
+# and reads its own snapshot; frames opened on either side of a commit
+# replace each other's entry.  No lock, as scale._MANIFESTS.
+_ZONES: dict[str, tuple[tuple, object]] = {}
 
 
 def _local(path: str) -> str:
@@ -65,13 +92,50 @@ def _stats_schema(table_schema: T.StructType, cols: list[str]) -> T.StructType:
     if missing:
         raise ValueError(f"build_zone_map: columns not in table: {missing}")
     fields = [
-        T.StructField("file", T.StringType(), False),
+        T.StructField(
+            "file", T.StringType(), False, {SCHEMA_KEY: table_schema.json()}
+        ),
         T.StructField("n_rows", T.LongType(), False),
     ]
     for c in cols:
         fields.append(T.StructField(f"min_{c}", by_name[c].dataType, True))
         fields.append(T.StructField(f"max_{c}", by_name[c].dataType, True))
     return T.StructType(fields)
+
+
+def _reader(spark: SparkSession, zone_map: DataFrame) -> DataFrameReader:
+    """A parquet reader given the table schema `zone_map` recorded, or
+    an inferring one when it recorded none."""
+    recorded = zone_map.schema["file"].metadata.get(SCHEMA_KEY)
+    if recorded is None:
+        return spark.read
+    return spark.read.schema(T.StructType.fromJson(json.loads(recorded)))
+
+
+def _zone_rows(zone_map: DataFrame) -> DataFrame:
+    """`zone_map`'s rows.  A bare parquet scan is read once per listing
+    into a driver-side Arrow table and served as a local relation, whose
+    filters and collects run on the driver with no job.  Any other
+    frame is returned as it is."""
+    plan = zone_map._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return zone_map
+    rel = plan.relation()
+    files = sorted(zone_map.inputFiles())
+    if rel.getClass().getSimpleName() != "HadoopFsRelation" or not files:
+        return zone_map
+    spark = zone_map.sparkSession
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = Path(files[0]).getFileSystem(spark._jsc.hadoopConfiguration())
+    listing = tuple(
+        (f, fs.getFileStatus(Path(f)).getModificationTime()) for f in files
+    )
+    root = rel.location().rootPaths().mkString(",")
+    hit = _ZONES.get(root)
+    if hit is None or hit[0] != listing:
+        hit = listing, zone_map.toArrow()
+        _ZONES[root] = hit
+    return spark.createDataFrame(hit[1], zone_map.schema)
 
 
 def build_zone_map(
@@ -87,7 +151,14 @@ def build_zone_map(
     row-at-a-time Python).  A column whose statistics are absent in
     any row group yields NULL bounds (= never pruned).  `only_files`
     restricts the build to a file subset (absolute paths — the
-    incremental-maintenance path, see :func:`zone_map_append`)."""
+    incremental-maintenance path, see :func:`zone_map_append`).
+
+    The `file` column's metadata records the table's schema as JSON
+    (key :data:`SCHEMA_KEY`), so writing the result and reading it
+    back with ``spark.read.parquet`` lets :func:`pruned_scan` read the
+    table without inferring its schema again.  The schema is the one
+    this build inferred: Hive partition columns included, in Spark's
+    inferred order and nullability."""
     probe = spark.read.parquet(table_path)
     schema = _stats_schema(probe.schema, cols)
     files = only_files if only_files is not None else probe.inputFiles()
@@ -149,11 +220,13 @@ def zone_map_append(
     that is no longer in the table (compaction, overwrite-in-place)
     means appends cannot heal the map — later pruned scans would
     reconstruct dead paths — so this raises and the caller rebuilds
-    with :func:`build_zone_map`."""
-    known = {r["file"] for r in zone_map.select("file").collect()}
+    with :func:`build_zone_map`.  Over a bare scan of a persisted map
+    with a recorded schema, a warm append that finds nothing new runs
+    no Spark job (see :func:`pruned_scan`)."""
+    known = {r["file"] for r in _zone_rows(zone_map).select("file").collect()}
     current = {
         _relative_to_root(f, table_path)
-        for f in spark.read.parquet(table_path).inputFiles()
+        for f in _reader(spark, zone_map).parquet(table_path).inputFiles()
     }
     gone = sorted(known - current)
     if gone:
@@ -188,10 +261,19 @@ def pruned_scan(
     Z-ORDERED layout is for (:func:`zorder_key`): interleaved
     clustering gives every indexed column locality, so each extra
     band multiplies the files skipped.  The file-list collect is one
-    row per surviving file."""
+    row per surviving file.
+
+    It runs no job of its own when `zone_map` is a bare parquet scan of
+    a map :func:`build_zone_map` wrote (``spark.read.parquet(dir)``):
+    the zone rows come from a driver-side cache keyed on the frame's
+    files and their modification times (one Arrow read per listing),
+    and the surviving files are read with the recorded table schema.
+    A derived frame (a union, a ``.where``) has its file list collected
+    by one job; a map without a recorded schema infers the schema with
+    one more.  Rows and schema are the same on every path."""
     if preds is None:
         preds = {col: (lo, hi)}
-    keep = zone_map
+    keep = _zone_rows(zone_map)
     cond = None
     for c, (clo, chi) in preds.items():
         overlap = F.col(f"min_{c}").isNull() | (
@@ -201,17 +283,14 @@ def pruned_scan(
         band = F.col(c).between(clo, chi)
         cond = band if cond is None else cond & band
     names = [r["file"] for r in keep.select("file").collect()]
-    if not names:
-        return spark.read.parquet(table_path).where(F.lit(False))
     root = table_path.rstrip("/")
     # `file` values are root-relative (nested layouts keep subdirs);
     # basePath keeps Hive partition-directory columns visible when the
     # surviving files live under partition subdirectories.
-    return (
-        spark.read.option("basePath", root)
-        .parquet(*[f"{root}/{n}" for n in names])
-        .where(cond)
-    )
+    reader = _reader(spark, zone_map).option("basePath", root)
+    if not names:
+        return reader.parquet(root).where(F.lit(False))
+    return reader.parquet(*[f"{root}/{n}" for n in names]).where(cond)
 
 
 def zorder_key(a, b, bits: int = 16):

@@ -5,6 +5,8 @@ import shutil
 from datetime import date
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from database_per_keyword_analysis_spark.sources import csv_repair, jdbc, sinks
@@ -664,3 +666,239 @@ def test_zonemap_zorder_delegates_to_single_morton_kernel(spark):
     # the historical hand-checked value still holds through delegation
     one = spark.range(1).select(Z.zorder_key(F.lit(3), F.lit(1), bits=2).alias("z"))
     assert one.collect()[0].z == 11
+
+
+def _bare_zone_map(spark, tbl, cols, zdir):
+    """Build `tbl`'s zone map, write it to `zdir` and open it as a bare
+    parquet scan, the way a caller reads a persisted map."""
+    from database_per_keyword_analysis_spark.sources import zonemap as Z
+
+    Z.build_zone_map(spark, tbl, cols).write.parquet(zdir)
+    return spark.read.parquet(zdir)
+
+
+@pytest.fixture(scope="module")
+def zone_layouts(spark, tmp_path_factory):
+    """Three tables with bare-scan zone maps, keyed by layout:
+    `plain` (pyarrow files clustered on v, ts and tz, plus one file
+    written without statistics), `zorder` (two columns) and `hive` (partitioned
+    by p)."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from database_per_keyword_analysis_spark.sources import zonemap as Z
+
+    root = tmp_path_factory.mktemp("zone_layouts")
+    t0 = dt.datetime(2024, 1, 1)
+
+    def part(ids):
+        return pa.table({
+            "id": pa.array(ids, pa.int64()),
+            "v": pa.array([float(i) for i in ids]),
+            "ts": pa.array([t0 + dt.timedelta(hours=i) for i in ids],
+                           pa.timestamp("us")),
+            "tz": pa.array([t0 + dt.timedelta(hours=i) for i in ids],
+                           pa.timestamp("us", tz="UTC")),
+            "g": pa.array([str(i % 7) for i in ids]),
+        })
+
+    plain = root / "plain"
+    plain.mkdir()
+    for k in range(6):
+        pq.write_table(part(range(k * 50, k * 50 + 50)), plain / f"part-{k}.parquet")
+    pq.write_table(part(range(300, 330)), plain / "part-nostats.parquet",
+                   write_statistics=False)
+
+    zorder = str(root / "zorder")
+    zk = Z.zorder_key(
+        Z.min_max_bin(F.col("x"), 0.0, 63.0, bits=6),
+        Z.min_max_bin(F.col("y"), 0.0, 63.0, bits=6),
+        bits=6,
+    )
+    spark.range(0, 4096).selectExpr(
+        "CAST(id % 64 AS LONG) AS x", "CAST(id / 64 AS LONG) AS y"
+    ).withColumn("_z", zk).repartitionByRange(16, "_z").sortWithinPartitions(
+        "_z"
+    ).drop("_z").write.parquet(zorder)
+
+    hive = str(root / "hive")
+    spark.range(0, 400).selectExpr(
+        "id", "CAST(id AS DOUBLE) AS v", "CAST(id % 4 AS INT) AS p"
+    ).repartitionByRange(4, "v").write.partitionBy("p").parquet(hive)
+
+    out = {}
+    for name, tbl, cols in (
+        ("plain", str(plain), ["v", "ts", "tz"]),
+        ("zorder", zorder, ["x", "y"]),
+        ("hive", hive, ["v"]),
+    ):
+        out[name] = tbl, _bare_zone_map(spark, tbl, cols, str(root / f"{name}_zm"))
+    return out
+
+
+@pytest.mark.parametrize("layout", ["plain", "zorder", "hive"])
+@settings(max_examples=6, deadline=None)
+@given(lo=st.integers(-100, 420), width=st.integers(0, 120),
+       lo2=st.integers(-10, 70), width2=st.integers(0, 40))
+@example(lo=5000, width=10, lo2=5000, width2=10)
+def test_pruned_scan_over_a_bare_scan_equals_both_other_paths(
+    spark, zone_layouts, layout, lo, width, lo2, width2
+):
+    """Over a bare-scan zone map (cached zone rows, recorded schema),
+    pruned_scan returns what a derived frame of the same map returns
+    (collected zone rows) and what the full scan's filter returns: the
+    same rows, columns in the same order, the same schema with its
+    nullability.  The bands cover empty overlaps, a file with NULL
+    stats, timestamp columns with and without a time zone, two-column
+    preds over a z-ordered table and Hive partition columns."""
+    import datetime as dt
+
+    from database_per_keyword_analysis_spark.sources import zonemap as Z
+
+    tbl, bare = zone_layouts[layout]
+    c = ("v", "ts", "tz")[width2 % 3]
+    if layout == "plain" and c != "v":
+        t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc if c == "tz" else None)
+        preds = {c: (t0 + dt.timedelta(hours=lo), t0 + dt.timedelta(hours=lo + width))}
+    elif layout == "zorder":
+        preds = {"x": (lo2, lo2 + width2), "y": (lo2 // 2, lo2 // 2 + width)}
+    else:
+        preds = {"v": (float(lo), float(lo + width))}
+    cond = None
+    for name, (clo, chi) in preds.items():
+        band = F.col(name).between(clo, chi)
+        cond = band if cond is None else cond & band
+    full = spark.read.parquet(tbl).where(cond)
+    fast = Z.pruned_scan(spark, tbl, bare, preds=preds)
+    derived = Z.pruned_scan(spark, tbl, bare.where(F.lit(True)), preds=preds)
+    want = sorted(tuple(r) for r in full.collect())
+    for got in (fast, derived):
+        assert got.columns == full.columns
+        assert got.schema == full.schema
+        assert sorted(tuple(r) for r in got.collect()) == want
+
+
+def test_warm_pruned_scan_runs_no_job_and_a_slice_one(spark, tmp_path, count_jobs):
+    """A warm pruned_scan over a bare-scan zone map reads its zone rows
+    from the driver cache and the table with the recorded schema: 0
+    jobs.  A dashboard slice (pruned_scan -> categorize -> top_k_by)
+    then runs exactly its one collect."""
+    import datetime as dt
+
+    from database_per_keyword_analysis_spark.config import KeywordConfig
+    from database_per_keyword_analysis_spark.operators import keywords, stats
+    from database_per_keyword_analysis_spark.sources import zonemap as Z
+
+    tbl = str(tmp_path / "posts")
+    spark.range(0, 800).selectExpr(
+        "id AS doc_id",
+        "CAST(TIMESTAMP'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, "
+        "CAST(id AS INT), 0, 0) AS TIMESTAMP_NTZ) AS ts",
+        "CASE WHEN id % 3 = 0 THEN 'spark data job' ELSE 'other post' END AS text",
+        "id % 97 AS views",
+    ).repartitionByRange(8, "ts").write.parquet(tbl)
+    bare = _bare_zone_map(spark, tbl, ["ts"], str(tmp_path / "zm"))
+    cfg = KeywordConfig(industry_keywords={"tech": ["spark", "data"]})
+    lo = dt.datetime(2024, 1, 5)
+    hi = dt.datetime(2024, 1, 8)
+
+    def scan():
+        return Z.pruned_scan(spark, tbl, bare, "ts", lo, hi)
+
+    def slice_rows(df=None):
+        df = scan() if df is None else df
+        flagged = keywords.categorize(df, cfg).where(keywords.flag_col("tech"))
+        return stats.top_k_by(
+            flagged.select("doc_id", "views"), "views", 10, "doc_id"
+        ).collect()
+
+    want = slice_rows(spark.read.parquet(tbl).where(F.col("ts").between(lo, hi)))
+    assert slice_rows() == want
+    assert count_jobs(scan) == 0
+    assert count_jobs(slice_rows) == 1
+    assert 0 < len(set(scan().inputFiles())) < 8
+
+
+def test_zone_map_without_a_recorded_schema_infers_it(spark, tmp_path, count_jobs):
+    """A zone map written without the schema metadata (as older code
+    wrote it) returns the same rows: its warm pruned_scan infers the
+    table's schema with one job."""
+    from pyspark.sql import types as T
+
+    from database_per_keyword_analysis_spark.sources import zonemap as Z
+
+    tbl = str(tmp_path / "t")
+    df = spark.range(0, 400).selectExpr("id", "CAST(id AS DOUBLE) AS v")
+    df.repartitionByRange(4, "v").write.parquet(tbl)
+    zm = Z.build_zone_map(spark, tbl, ["v"])
+    plain = T.StructType([T.StructField(f.name, f.dataType, f.nullable) for f in zm.schema])
+    spark.createDataFrame(zm.collect(), plain).write.parquet(str(tmp_path / "zm"))
+    old = spark.read.parquet(str(tmp_path / "zm"))
+    assert Z.SCHEMA_KEY not in old.schema["file"].metadata
+
+    def scan():
+        return Z.pruned_scan(spark, tbl, old, "v", 50.0, 120.0)
+
+    want = spark.read.parquet(tbl).where("v BETWEEN 50 AND 120")
+    got = scan()
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert count_jobs(scan) == 1
+
+
+def test_a_bare_zone_map_frame_reads_its_own_snapshot(spark, tmp_path, count_jobs):
+    """A frame opened before a zone-map file was added keeps returning
+    its own snapshot's rows; a frame opened after it sees the new row.
+    Each frame's first call after the other's reads its zone rows once
+    (1 job); a repeat is warm (0)."""
+    from database_per_keyword_analysis_spark.sources import zonemap as Z
+
+    tbl = str(tmp_path / "t")
+    zdir = str(tmp_path / "zm")
+    spark.range(0, 200).selectExpr("id", "CAST(id AS DOUBLE) AS v").repartitionByRange(
+        4, "v"
+    ).write.parquet(tbl)
+    before = _bare_zone_map(spark, tbl, ["v"], zdir)
+    old_files = set(spark.read.parquet(tbl).inputFiles())
+    spark.range(200, 300).selectExpr("id", "CAST(id AS DOUBLE) AS v").coalesce(
+        1
+    ).write.mode("append").parquet(tbl)
+    new_files = sorted(set(spark.read.parquet(tbl).inputFiles()) - old_files)
+    Z.build_zone_map(spark, tbl, ["v"], only_files=new_files).write.mode(
+        "append"
+    ).parquet(zdir)
+    after = spark.read.parquet(zdir)
+
+    def ids(zm):
+        return sorted(r.id for r in Z.pruned_scan(spark, tbl, zm, "v", 150.0, 250.0).collect())
+
+    assert ids(before) == list(range(150, 200))
+    assert ids(after) == list(range(150, 251))
+    assert count_jobs(lambda: Z.pruned_scan(spark, tbl, after, "v", 0.0, 1.0)) == 0
+    assert count_jobs(lambda: Z.pruned_scan(spark, tbl, before, "v", 0.0, 1.0)) == 1
+    assert count_jobs(lambda: Z.pruned_scan(spark, tbl, before, "v", 0.0, 1.0)) == 0
+
+
+def test_zone_map_append_over_a_bare_scan_reads_the_cache(spark, tmp_path, count_jobs):
+    """zone_map_append over a bare-scan map finds the known files in the
+    cached zone rows and lists the table with the recorded schema: a
+    warm append runs only the new files' build planning (1 job, its
+    schema probe), and none when nothing is new."""
+    from database_per_keyword_analysis_spark.sources import zonemap as Z
+
+    tbl = str(tmp_path / "t")
+    spark.range(0, 100).selectExpr("id", "CAST(id AS DOUBLE) AS v").repartitionByRange(
+        4, "v"
+    ).write.parquet(tbl)
+    bare = _bare_zone_map(spark, tbl, ["v"], str(tmp_path / "zm"))
+    assert count_jobs(lambda: Z.zone_map_append(spark, tbl, bare, ["v"])) == 1
+    assert count_jobs(lambda: Z.zone_map_append(spark, tbl, bare, ["v"])) == 0
+    spark.range(100, 200).selectExpr("id", "CAST(id AS DOUBLE) AS v").repartitionByRange(
+        2, "v"
+    ).write.mode("append").parquet(tbl)
+    assert count_jobs(lambda: Z.zone_map_append(spark, tbl, bare, ["v"])) == 1
+    got = sorted(tuple(r) for r in Z.zone_map_append(spark, tbl, bare, ["v"]).collect())
+    want = sorted(tuple(r) for r in Z.build_zone_map(spark, tbl, ["v"]).collect())
+    assert got == want
